@@ -50,6 +50,17 @@ def tracked_persist(df: DataFrame, level: str | None = None) -> DataFrame:
     return df
 
 
+def release_persist(df: DataFrame) -> None:
+    """Unpersist one frame and drop it from its session's registry — the
+    single-frame release for owners with a known end of use (an
+    ``EventLog`` unpersisting its log), so the registry never keeps a
+    frame whose blocks are already gone."""
+    df.unpersist()
+    reg = getattr(df.sparkSession, _REG_ATTR, None)
+    if reg:
+        reg[:] = [d for d in reg if d is not df]
+
+
 def release_tracked_persists(spark: SparkSession) -> int:
     """Unpersist every tracked frame; returns how many were released.
 

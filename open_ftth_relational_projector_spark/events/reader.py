@@ -108,11 +108,10 @@ class EventLog:
         )
 
     def unpersist(self) -> None:
-        if self._raw is not None:
-            self._raw.unpersist()
-            return
-        for df in self._typed.values():
-            df.unpersist()
+        from open_ftth_relational_projector_spark.cache import release_persist
+
+        for df in [self._raw] if self._raw is not None else self._typed.values():
+            release_persist(df)
 
     def restricted(
         self, filters: dict[str, tuple[str, DataFrame | list]]

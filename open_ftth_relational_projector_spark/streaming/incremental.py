@@ -19,6 +19,12 @@ Correctness rests on per-key determinism: a key's final row depends only on
 the reference's incremental fold — verified by tests/test_streaming.py
 equivalence over random batch splits.
 
+runner.apply_batch takes this recompute (``compute_deltas``) only for the
+batches the driver-side replay (streaming/replay.py) cannot: oversized
+ones, and ones overlapping the watermark. The delta types, the touched-key
+extraction, the sink point lookup and the edge context here are shared
+with the driver path.
+
 Scale: step 2's cost is ∝ events-of-touched-keys, reached through a
 broadcast semi-join that Catalyst pushes into the (bucketed-by-entity at
 scale) bronze scan, not ∝ log size. conduit_slack — the one cross-entity
@@ -37,6 +43,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from open_ftth_relational_projector_spark.events.reader import EventLog
+from open_ftth_relational_projector_spark.sinks.ddl import SCHEMA
 from open_ftth_relational_projector_spark.projections.core import (
     _has_child_final,
     _parent_edges,
@@ -94,24 +101,10 @@ CABLE_TRIGGER_TYPES = [
 ]
 
 
-def collect_batch(batch_envelopes: DataFrame) -> list[tuple[int, str, dict]]:
-    """ONE job: pull the micro-batch to the driver as (seq, type, payload).
-
-    A micro-batch is one poll interval of events — small by construction
-    (the reference applies it on a single thread). Everything per-batch and
-    ∝ batch (touched-key extraction, edge-delta resolution) then happens
-    driver-side with zero additional Spark jobs; only the neighborhood
-    recompute fans out to the cluster.
-    """
-    return parse_envelope_rows(
-        batch_envelopes.select("seq", "event_type", "payload").collect()
-    )
-
-
 def parse_envelope_rows(rows) -> list[tuple[int, str, dict]]:
     """(seq, event_type, payload-json-string) rows → parsed tuples — the
-    ONE definition of the driver-side batch shape (collect_batch and
-    apply_batch's size-gate probe both route through it)."""
+    ONE definition of the driver-side batch shape (apply_batch's size-gate
+    probe routes through it)."""
     import json
 
     return [(r.seq, r.event_type, json.loads(r.payload)) for r in rows]
@@ -148,16 +141,10 @@ def affected_ids_from_rows(
     return out
 
 
-def affected_ids(batch_envelopes: DataFrame) -> dict[str, list[str]]:
-    """Distinct touched entity ids per domain (one collect; see
-    collect_batch)."""
-    return affected_ids_from_rows(collect_batch(batch_envelopes))
-
-
 def affected_ids_distributed(batch_log: EventLog) -> dict[str, list[str]]:
     """Touched entity ids per domain, extracted as Spark aggregations.
 
-    The oversized-batch twin of ``affected_ids``: the batch rows never
+    The oversized-batch twin of ``affected_ids_from_rows``: the batch rows never
     reach the driver — per-type id projections union per domain and only
     the DISTINCT id lists are collected (∝ touched entities, not ∝ batch
     rows; a catch-up batch after long downtime can hold the whole backlog,
@@ -215,6 +202,26 @@ class GroupDelta:
     rows: object  # pyarrow.Table
 
 
+def sink_rows(sink, table: str, cols: list[str], key: str, keys) -> list[tuple]:
+    """Rows (``cols`` in order) of sink ``table`` whose ``key`` is in
+    ``keys`` — the one indexed point lookup every driver-side replay seeds
+    from (∝ batch). NULLs come back as None: pandas renders NULLs in
+    numeric columns as NaN, which arrow casts and boolean logic would
+    misread."""
+    keys = sorted(set(keys))
+    if not keys:
+        return []
+    col_sql = ", ".join(f'"{c}"' for c in cols)
+    ph = ", ".join("?" for _ in keys)
+    df = sink.fetch_df(
+        f'SELECT {col_sql} FROM {SCHEMA}."{table}" WHERE "{key}" IN ({ph})', keys
+    )
+    return [
+        tuple(None if isinstance(v, float) and v != v else v for v in row)
+        for row in df.itertuples(index=False, name=None)
+    ]
+
+
 @dataclass
 class EdgeContext:
     """Sink-maintained affix-edge neighborhood for one micro-batch.
@@ -232,11 +239,10 @@ class EdgeContext:
     """
 
     all_eq: list[str]  # touched spans ∪ their affix parents (fold keys)
-    has_child_rows: list[tuple[str, bool]]  # folded flags, keys ⊆ all_eq
+    has_child: dict[str, bool]  # folded flags, keys ⊆ all_eq
     new_edges: object  # pyarrow appends for _aux_affix_edge
     new_registry: object  # pyarrow appends for _aux_root_segment
     new_detaches: object  # pyarrow appends for _aux_detach
-    span_replay: object = None  # streaming.replay.SpanReplayResult
 
 
 def _fold_has_child(
@@ -286,35 +292,32 @@ def _latest_before(versions: list[tuple[int, str | None]], seq: int):
     return versions[i - 1] if i > 0 else None
 
 
-# Batches above this row count skip the driver-side edge-delta path and fall
-# back to the distributed full recompute (a giant catch-up batch amortizes
-# it; a poll-interval micro-batch never gets near this).
+# Batches above this row count skip the driver path and fall back to the
+# distributed recompute (a giant catch-up batch amortizes it; a
+# poll-interval micro-batch never gets near this).
 MAX_DRIVER_BATCH_ROWS = 200_000
 
 
 def build_edge_context(
-    full: EventLog,
     parsed: list[tuple[int, str, dict]],
     ids: dict[str, list[str]],
     sink,
 ) -> EdgeContext | None:
-    """Resolve the batch's edge/registry/detach deltas against the sink aux
-    tables and assemble the restricted fold inputs — driver-side, zero
-    Spark jobs (the batch is already collected; the sink lookups are
-    indexed ∝ batch-neighborhood).
+    """Resolve a driver-sized batch's edge/registry/detach deltas against
+    the sink aux tables and fold the touched neighborhood's has-child
+    flags — driver-side, zero Spark jobs (the batch is already collected;
+    the sink lookups are indexed ∝ batch-neighborhood).
 
-    Returns None when the batch touches no span-equipment entities or is
-    too large for driver-side handling (the caller then recomputes the
-    edge sets distributedly from the full log).
+    Returns None when the batch touches no span-equipment entities.
     """
-    from open_ftth_relational_projector_spark.sinks.ddl import SCHEMA
+    from open_ftth_relational_projector_spark.streaming.replay import (
+        _arrow,
+        _root_segment_id,
+    )
 
     span_ids = ids.get("span")
-    if not span_ids or len(parsed) > MAX_DRIVER_BATCH_ROWS:
+    if not span_ids:
         return None
-    import pyarrow as pa
-
-    spark = full.spark
     children = ids.get("cable", [])
 
     # -- batch extraction (mirrors core._edge_events / _parent_registry) ---
@@ -325,12 +328,7 @@ def build_edge_context(
     for seq, etype, payload in parsed:
         if etype == "SpanEquipmentPlacedInRouteNetwork":
             eq = payload.get("equipment") or {}
-            root = _payload_get(eq, "spanStructures")
-            root_seg = None
-            if root:
-                segs = (root[0] or {}).get("spanSegments")
-                if segs:
-                    root_seg = (segs[0] or {}).get("id")
+            root_seg = _root_segment_id(eq)
             if root_seg is not None:
                 placements.append((eq.get("id"), seq, root_seg))
             for hop in eq.get("utilityNetworkHops") or []:
@@ -346,23 +344,18 @@ def build_edge_context(
         elif etype == "SpanEquipmentDetachedFromParent":
             detaches.append((payload.get("spanEquipmentId"), seq))
 
-    def fetch(sql: str, params: list) -> list[tuple]:
-        return list(sink.fetch_df(sql, params).itertuples(index=False, name=None))
-
-    def in_clause(vals: list[str]) -> str:
-        return ", ".join("?" for _ in vals)
+    registry_cols = ["root_segment_id", "seq", "parent_id"]
+    edge_cols = ["child_id", "seq", "parent_id"]
 
     # -- registry deltas: placements register, removals tombstone ----------
     new_registry: list[tuple[str, int, str | None]] = [
         (root, seq, pid) for pid, seq, root in placements
     ]
     if removals:
-        rm_ids = sorted({pid for pid, _ in removals})
         by_pid: dict[str, list[tuple[int, str]]] = {}
-        for root, vseq, pid in fetch(
-            f'SELECT root_segment_id, seq, parent_id FROM {SCHEMA}."_aux_root_segment" '
-            f"WHERE parent_id IN ({in_clause(rm_ids)})",
-            rm_ids,
+        for root, vseq, pid in sink_rows(
+            sink, "_aux_root_segment", registry_cols, "parent_id",
+            {pid for pid, _ in removals},
         ):
             by_pid.setdefault(pid, []).append((vseq, root))
         for pid, seq, root in placements:
@@ -376,13 +369,11 @@ def build_edge_context(
 
     # -- batch edges, resolved as of the edge event (frozen at edge time) --
     new_edges: list[tuple[str, int, str]] = []
-    roots = sorted({root for _, _, root in edge_events if root is not None})
+    roots = {root for _, _, root in edge_events if root is not None}
     if roots:
         by_root: dict[str, list[tuple[int, str | None]]] = {}
-        for root, vseq, pid in fetch(
-            f'SELECT root_segment_id, seq, parent_id FROM {SCHEMA}."_aux_root_segment" '
-            f"WHERE root_segment_id IN ({in_clause(roots)})",
-            roots,
+        for root, vseq, pid in sink_rows(
+            sink, "_aux_root_segment", registry_cols, "root_segment_id", roots
         ):
             by_root.setdefault(root, []).append((vseq, pid))
         for root, vseq, pid in new_registry:
@@ -396,65 +387,37 @@ def build_edge_context(
 
     # -- parent expansion: prior edges of touched children + batch edges ---
     parents: set[str] = {p for _, _, p in new_edges}
-    if children:
-        parents.update(
-            p
-            for (p,) in fetch(
-                f'SELECT DISTINCT parent_id FROM {SCHEMA}."_aux_affix_edge" '
-                f"WHERE child_id IN ({in_clause(children)})",
-                children,
-            )
+    parents.update(
+        p
+        for (p,) in sink_rows(
+            sink, "_aux_affix_edge", ["parent_id"], "child_id", children
         )
+    )
     all_eq = sorted(set(span_ids) | parents)
 
     # -- fold inputs: every edge of every fold key, + their detaches -------
-    prior_edges = fetch(
-        f'SELECT child_id, seq, parent_id FROM {SCHEMA}."_aux_affix_edge" '
-        f"WHERE parent_id IN ({in_clause(all_eq)})",
-        all_eq,
+    fold_edges = (
+        sink_rows(sink, "_aux_affix_edge", edge_cols, "parent_id", all_eq) + new_edges
     )
-    fold_edges = prior_edges + new_edges
-    fold_children = sorted({c for c, _, _ in fold_edges})
-    fold_detaches = list(detaches)
-    if fold_children:
-        fold_detaches += fetch(
-            f'SELECT child_id, seq FROM {SCHEMA}."_aux_detach" '
-            f"WHERE child_id IN ({in_clause(fold_children)})",
-            fold_children,
-        )
-
-    def arrow(rows: list[tuple], names: list[str], types: list) -> pa.Table:
-        cols = list(zip(*rows)) if rows else [[] for _ in names]
-        return pa.table(
-            {n: pa.array(list(c), t) for n, c, t in zip(names, cols, types)}
-        )
-
-    has_child_rows = _fold_has_child(fold_edges, fold_detaches)
-
-    from open_ftth_relational_projector_spark.streaming.replay import (
-        replay_span_batch,
+    fold_detaches = detaches + sink_rows(
+        sink, "_aux_detach", ["child_id", "seq"], "child_id",
+        {c for c, _, _ in fold_edges},
     )
+
+    def table(rows: list[tuple], cols: list[str]):
+        return _arrow([dict(zip(cols, r)) for r in rows], cols, {"seq": "int64"})
 
     return EdgeContext(
         all_eq=all_eq,
-        has_child_rows=has_child_rows,
-        new_edges=arrow(
-            new_edges, ["child_id", "seq", "parent_id"], ["string", "int64", "string"]
-        ),
-        new_registry=arrow(
-            new_registry,
-            ["root_segment_id", "seq", "parent_id"],
-            ["string", "int64", "string"],
-        ),
-        new_detaches=arrow(detaches, ["child_id", "seq"], ["string", "int64"]),
-        span_replay=replay_span_batch(
-            parsed, span_ids, all_eq, dict(has_child_rows), sink
-        ),
+        has_child=dict(_fold_has_child(fold_edges, fold_detaches)),
+        new_edges=table(new_edges, edge_cols),
+        new_registry=table(new_registry, registry_cols),
+        new_detaches=table(detaches, ["child_id", "seq"]),
     )
 
 
-def _ids_df(log: EventLog, ids: list[str]) -> DataFrame:
-    return log.spark.createDataFrame([(i,) for i in ids], "id string")
+def _ids_df(spark, ids: list[str], col: str = "id") -> DataFrame:
+    return spark.createDataFrame([(i,) for i in ids], f"{col} string")
 
 
 # Above this many keys an IN-set literal filter stops being the cheap form
@@ -464,7 +427,7 @@ MAX_INLINE_IDS = 10_000
 
 def _restrict(log: EventLog, types: list[str], ids: list[str]) -> EventLog:
     key: list | DataFrame = (
-        ids if len(ids) <= MAX_INLINE_IDS else _ids_df(log, ids)
+        ids if len(ids) <= MAX_INLINE_IDS else _ids_df(log.spark, ids)
     )
     return log.restricted({t: (AFFECTED[t][1], key) for t in types})
 
@@ -473,13 +436,7 @@ def _keyed_to(df: DataFrame, ids: list[str], col: str = "id") -> DataFrame:
     """Restrict a keyed frame to ``ids`` — IN-set filter for small sets."""
     if len(ids) <= MAX_INLINE_IDS:
         return df.filter(F.col(col).isin(ids))
-    return df.join(
-        F.broadcast(_ids_df_any(df, ids, col)), col, "left_semi"
-    )
-
-
-def _ids_df_any(df: DataFrame, ids: list[str], col: str) -> DataFrame:
-    return df.sparkSession.createDataFrame([(i,) for i in ids], f"{col} string")
+    return df.join(F.broadcast(_ids_df(df.sparkSession, ids, col)), col, "left_semi")
 
 
 def _keyed_delta(result: DataFrame, affected: list[str], key: str = "id") -> TableDelta:
@@ -497,12 +454,11 @@ def md5_uuid(value: str) -> str:
 
 
 def compute_deltas(
-    full: EventLog,
-    ids: dict[str, list[str]],
-    edge_ctx: EdgeContext | None = None,
-    skip: tuple[str, ...] = (),
+    full: EventLog, ids: dict[str, list[str]]
 ) -> dict[str, TableDelta | GroupDelta]:
-    """Recompute every affected row set against the accumulated log.
+    """Recompute every affected row set against the accumulated log — the
+    distributed path for batches the driver-side replay cannot take
+    (oversized, or overlapping the watermark).
 
     Returns per-table deltas; ``_aux_slack_end`` carries the slack-end
     pre-aggregation whose node-level re-aggregation happens sink-side
@@ -517,12 +473,12 @@ def compute_deltas(
 
     thunks: dict[str, object] = {}
 
-    if ids.get("work_task") and "work_task" not in skip:
+    if ids.get("work_task"):
         a = ids["work_task"]
         r = _restrict(full, ["WorkTaskCreated", "WorkTaskStatusChanged"], a)
         thunks["work_task"] = lambda a=a, r=r: _keyed_delta(project_work_task(r), a)
 
-    if ids.get("installation") and "installation" not in skip:
+    if ids.get("installation"):
         a = ids["installation"]
         r = _restrict(
             full,
@@ -538,7 +494,7 @@ def compute_deltas(
             project_installation(r), a
         )
 
-    if ids.get("node_container") and "node_container" not in skip:
+    if ids.get("node_container"):
         a = ids["node_container"]
         r = _restrict(
             full,
@@ -553,7 +509,7 @@ def compute_deltas(
             project_node_container(r), a
         )
 
-    if ids.get("terminal") and "service_termination" not in skip:
+    if ids.get("terminal"):
         a = ids["terminal"]
         r = _restrict(
             full,
@@ -569,21 +525,9 @@ def compute_deltas(
             project_service_termination(r), a
         )
 
-    if ids.get("span") and edge_ctx is not None:
-        # driver-side state-seeded replay (streaming/replay.py) already
-        # produced both span deltas inside build_edge_context; nothing to
-        # fan out. The aux state writes ride the sink transaction in
-        # runner.apply_batch.
-        rr = edge_ctx.span_replay
-        thunks["_span_group"] = lambda rr=rr, all_eq=edge_ctx.all_eq: {
-            "span_equipment": TableDelta(
-                upserts=rr.span_upserts, delete_keys=rr.span_deletes
-            ),
-            "_aux_slack_end": GroupDelta(group_keys=all_eq, rows=rr.slack_rows),
-        }
-    elif ids.get("span"):
-        # distributed fallback: recompute the superset's state and the
-        # has-child fold from the full log (large catch-up batches).
+    if ids.get("span"):
+        # recompute the superset's state and the has-child fold from the
+        # full log
         def _span_group(a=ids["span"], ids=ids):
             edges = _parent_edges(full).persist()
             all_eq, restricted, span_state = _span_state_superset(
@@ -615,7 +559,7 @@ def compute_deltas(
 
         thunks["_span_group"] = _span_group
 
-    if ids.get("interest") and "rel_interest_to_route_element" not in skip:
+    if ids.get("interest"):
         a = ids["interest"]
         r = _restrict(
             full,
@@ -631,7 +575,7 @@ def compute_deltas(
             group_keys=a, rows=df.toArrow()
         )
 
-    if ids.get("cable") and "rel_fiber_cable_to_route_element" not in skip:
+    if ids.get("cable"):
         a = ids["cable"]
         # restrict only the trigger streams; walks + specs stay whole (dims)
         r = _restrict(full, CABLE_TRIGGER_TYPES, a)
@@ -665,14 +609,10 @@ def _span_state_superset(
     span_ids = ids["span"]
     all_ids = set(span_ids)
     if ids.get("cable"):  # cable triggers == the edge-changing event types
-        ids_df = _ids_df(full, ids["cable"])
+        ids_df = _ids_df(full.spark, ids["cable"], "child_id")
         parents = (
             (_parent_edges(full) if edges is None else edges)
-            .join(
-                F.broadcast(ids_df.withColumnRenamed("id", "child_id")),
-                "child_id",
-                "left_semi",
-            )
+            .join(F.broadcast(ids_df), "child_id", "left_semi")
             .select(F.col("parent_id").alias("id"))
             .distinct()
         )

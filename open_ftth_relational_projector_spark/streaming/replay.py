@@ -13,8 +13,10 @@ only the touched rows. Spec registries ride along as sink aux tables
 
 Scale shape: sink reads and writes are indexed and ∝ batch; the replay is
 O(batch events); nothing scans the log. Batches above the driver threshold
-fall back to the distributed recompute (incremental.MAX_DRIVER_BATCH_ROWS),
-which then reseeds these aux tables from the log.
+(incremental.MAX_DRIVER_BATCH_ROWS) or overlapping the watermark take the
+distributed recompute instead, which always reseeds these aux tables from
+the log. Every replay returns ``TableDelta``/``GroupDelta`` per table, the
+same delta map the distributed path produces.
 
 Faithfulness notes (mirroring projections/core.py, NOT events/oracle.py's
 stricter KeyError behavior):
@@ -30,7 +32,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from open_ftth_relational_projector_spark.sinks.ddl import SCHEMA, TABLE_COLUMNS
+from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
+from open_ftth_relational_projector_spark.streaming.incremental import (
+    GroupDelta,
+    TableDelta,
+    sink_rows,
+)
 
 STATE_COLS = [c for c, _ in TABLE_COLUMNS["_aux_span_state"]]
 PUBLIC_COLS = [c for c, _ in TABLE_COLUMNS["span_equipment"]]
@@ -51,9 +58,7 @@ SPAN_EVENT_TYPES = {
 class SpanReplayResult:
     state_upserts: object  # pyarrow.Table in _aux_span_state column order
     state_deletes: list[str]
-    span_upserts: object  # pyarrow.Table in span_equipment column order
-    span_deletes: list[str]
-    slack_rows: object  # pyarrow.Table in _aux_slack_end column order
+    deltas: dict[str, TableDelta | GroupDelta]  # span_equipment, _aux_slack_end
 
 
 def _dedup_keep_order(refs) -> list:
@@ -225,28 +230,11 @@ def replay_span_batch(
         (e for e in parsed if e[1] in SPAN_EVENT_TYPES), key=lambda e: e[0]
     )
 
-    def fetch(sql, params):
-        # pandas renders SQL NULLs in numeric columns as NaN — map back to
-        # None so arrow int casts and boolean logic see real nulls
-        def clean(v):
-            return None if (isinstance(v, float) and v != v) else v
-
-        return [
-            tuple(clean(v) for v in row)
-            for row in sink.fetch_df(sql, params).itertuples(index=False, name=None)
-        ]
-
     # -- seed state + registries (∝ batch, indexed) -------------------------
-    states: dict[str, dict] = {}
-    if all_eq:
-        ph = ", ".join("?" for _ in all_eq)
-        cols = ", ".join(f'"{c}"' for c in STATE_COLS)
-        for row in fetch(
-            f'SELECT {cols} FROM {SCHEMA}."_aux_span_state" WHERE id IN ({ph})',
-            all_eq,
-        ):
-            st = dict(zip(STATE_COLS, row))
-            states[st["id"]] = st
+    states: dict[str, dict] = {
+        row[0]: dict(zip(STATE_COLS, row))
+        for row in sink_rows(sink, "_aux_span_state", STATE_COLS, "id", all_eq)
+    }
 
     spec_ids = set()
     for _seq, etype, p in events:
@@ -256,16 +244,13 @@ def replay_span_batch(
             spec_ids.add(p.get("newSpecificationId"))
     spec_ids.discard(None)
 
-    span_specs: dict[str, tuple] = {}  # spec_id -> (name, struct_spec_id)
-    if spec_ids:
-        ids = sorted(spec_ids)
-        ph = ", ".join("?" for _ in ids)
-        for sid, name, ssid in fetch(
-            f'SELECT spec_id, name, struct_spec_id FROM {SCHEMA}."_aux_span_spec" '
-            f"WHERE spec_id IN ({ph})",
-            ids,
-        ):
-            span_specs[sid] = (name, ssid)
+    span_specs: dict[str, tuple] = {  # spec_id -> (name, struct_spec_id)
+        sid: (name, ssid)
+        for sid, name, ssid in sink_rows(
+            sink, "_aux_span_spec", ["spec_id", "name", "struct_spec_id"],
+            "spec_id", spec_ids,
+        )
+    }
     # batch spec-adds are applied during the replay at their seq; struct
     # specs referenced by either source are fetched after a first pass
     batch_span_specs = {
@@ -278,16 +263,12 @@ def replay_span_batch(
         ssid = ((spec.get("rootTemplate") or {}).get("spanStructureSpecificationId"))
         if ssid is not None:
             struct_ids.add(ssid)
-    struct_specs: dict[str, int | None] = {}
-    if struct_ids:
-        ids = sorted(struct_ids)
-        ph = ", ".join("?" for _ in ids)
-        for ssid, od in fetch(
-            f'SELECT struct_spec_id, outer_diameter FROM {SCHEMA}."_aux_struct_spec" '
-            f"WHERE struct_spec_id IN ({ph})",
-            ids,
-        ):
-            struct_specs[ssid] = od
+    struct_specs: dict[str, int | None] = dict(
+        sink_rows(
+            sink, "_aux_struct_spec", ["struct_spec_id", "outer_diameter"],
+            "struct_spec_id", struct_ids,
+        )
+    )
 
     # -- ordered replay (the reference's fold, state-seeded) ----------------
     def resolve_spec(spec_id):
@@ -379,13 +360,15 @@ def replay_span_batch(
     return SpanReplayResult(
         state_upserts=_arrow(touched_states, STATE_COLS, _STATE_TYPES),
         state_deletes=gone,
-        span_upserts=_arrow(touched_states, PUBLIC_COLS, _STATE_TYPES),
-        span_deletes=gone,
-        slack_rows=_arrow(
-            slack_rows,
-            [c for c, _ in TABLE_COLUMNS["_aux_slack_end"]],
-            {},
-        ),
+        deltas={
+            "span_equipment": TableDelta(
+                _arrow(touched_states, PUBLIC_COLS, _STATE_TYPES), gone
+            ),
+            "_aux_slack_end": GroupDelta(
+                all_eq,
+                _arrow(slack_rows, [c for c, _ in TABLE_COLUMNS["_aux_slack_end"]], {}),
+            ),
+        },
     )
 
 
@@ -453,14 +436,14 @@ def replay_lww_tables(
     parsed: list[tuple[int, str, dict]],
     ids: dict[str, list[str]],
     sink,
-) -> dict[str, tuple[object, list[str]]]:
+) -> dict[str, TableDelta]:
     """Driver-side replay of the join-free LWW tables for one micro-batch.
 
     The sink's public table IS the full state for these tables — seed the
     touched ids' rows (indexed, ∝ batch), apply the batch's events in seq
-    order, return (arrow upserts, delete keys) per table. Zero Spark jobs.
+    order, return a keyed delta per table. Zero Spark jobs.
     """
-    out: dict[str, tuple[object, list[str]]] = {}
+    out: dict[str, TableDelta] = {}
     for table, spec in _LWW_SPECS.items():
         touched_ids = ids.get(spec["domain"])
         if not touched_ids:
@@ -469,15 +452,10 @@ def replay_lww_tables(
         ctype, cid, cfields, cguard = spec["created"]
         relevant = {ctype, *spec["updates"]}
 
-        states: dict[str, dict] = {}
-        ph = ", ".join("?" for _ in touched_ids)
-        col_sql = ", ".join(f'"{c}"' for c in cols)
-        for row in sink.fetch_df(
-            f'SELECT {col_sql} FROM {SCHEMA}."{table}" WHERE id IN ({ph})',
-            touched_ids,
-        ).itertuples(index=False, name=None):
-            st = dict(zip(cols, row))
-            states[st["id"]] = st
+        states: dict[str, dict] = {
+            row[0]: dict(zip(cols, row))
+            for row in sink_rows(sink, table, cols, "id", touched_ids)
+        }
 
         for _seq, etype, p in sorted(
             (e for e in parsed if e[1] in relevant), key=lambda e: e[0]
@@ -495,7 +473,7 @@ def replay_lww_tables(
 
         rows = [states[i] for i in touched_ids if i in states]
         gone = [i for i in touched_ids if i not in states]
-        out[table] = (_arrow(rows, cols, {}), gone)
+        out[table] = TableDelta(_arrow(rows, cols, {}), gone)
     return out
 
 
@@ -509,18 +487,18 @@ def replay_rel_batch(
     parsed: list[tuple[int, str, dict]],
     ids: dict[str, list[str]],
     sink,
-) -> dict[str, tuple]:
+) -> dict[str, TableDelta | GroupDelta]:
     """Driver-side replay of the registry-joined tables for one micro-batch.
 
     One pass over the batch's events in seq order maintains the registries
     (specs, container→node relation, walk versions, cable placements) —
     seeded from the sink aux tables (∝ batch, indexed) — so every lookup a
     projection expresses as an as-of join resolves against exactly the
-    registry state at that event's position. Returns per-table results:
+    registry state at that event's position. Returns per-table deltas:
 
-      node_container / service_termination → ("keyed", upserts, deletes)
-      rel_interest_to_route_element        → ("group", group_keys, rows)
-      rel_fiber_cable_to_route_element     → ("group", group_keys, rows)
+      node_container / service_termination → TableDelta
+      rel_interest_to_route_element        → GroupDelta
+      rel_fiber_cable_to_route_element     → GroupDelta
 
     Cables touched only by a NON-trigger event (e.g. a re-placement whose
     spec isn't a cable) are left out of the group keys entirely: the
@@ -535,28 +513,6 @@ def replay_rel_batch(
     term_ids = ids.get("terminal") or []
     interest_ids = ids.get("interest") or []
     cable_ids = set(ids.get("cable") or [])
-
-    def fetch(sql, params):
-        def clean(v):
-            return None if (isinstance(v, float) and v != v) else v
-
-        return [
-            tuple(clean(v) for v in row)
-            for row in sink.fetch_df(sql, params).itertuples(index=False, name=None)
-        ]
-
-    def seed_keyed(table, cols, keys):
-        if not keys:
-            return {}
-        ph = ", ".join("?" for _ in keys)
-        col_sql = ", ".join(f'"{c}"' for c in cols)
-        return {
-            row[0]: dict(zip(cols, row))
-            for row in fetch(
-                f'SELECT {col_sql} FROM {SCHEMA}."{table}" WHERE {cols[0]} IN ({ph})',
-                list(keys),
-            )
-        }
 
     # ---- scan the batch once to collect the ids each seed needs ----------
     nc_spec_ids, term_spec_ids, span_spec_ids = set(), set(), set()
@@ -587,58 +543,55 @@ def replay_rel_batch(
 
     # ---- seeds (all indexed point lookups, ∝ batch) -----------------------
     nc_specs = {
-        k: (v["name"], v["category"])
-        for k, v in seed_keyed(
-            "_aux_nc_spec", ["spec_id", "name", "category"], sorted(nc_spec_ids)
-        ).items()
+        k: (name, cat)
+        for k, name, cat in sink_rows(
+            sink, "_aux_nc_spec", ["spec_id", "name", "category"], "spec_id",
+            nc_spec_ids,
+        )
     }
-    term_specs = {
-        k: v["is_customer_termination"]
-        for k, v in seed_keyed(
-            "_aux_term_spec",
-            ["spec_id", "is_customer_termination"],
-            sorted(term_spec_ids),
-        ).items()
-    }
-    span_specs = {
-        k: v["is_cable"]
-        for k, v in seed_keyed(
-            "_aux_span_spec", ["spec_id", "is_cable"], sorted(span_spec_ids)
-        ).items()
-    }
-    placement_reg = {
-        k: v["interest_id"]
-        for k, v in seed_keyed(
-            "_aux_cable_placement",
-            ["cable_id", "interest_id"],
-            sorted(affix_cables),
-        ).items()
-    }
-    walk_interests = sorted(
-        placement_interests | {i for i in placement_reg.values() if i is not None}
+    term_specs = dict(
+        sink_rows(
+            sink, "_aux_term_spec", ["spec_id", "is_customer_termination"],
+            "spec_id", term_spec_ids,
+        )
+    )
+    span_specs = dict(
+        sink_rows(
+            sink, "_aux_span_spec", ["spec_id", "is_cable"], "spec_id", span_spec_ids
+        )
+    )
+    placement_reg = dict(
+        sink_rows(
+            sink, "_aux_cable_placement", ["cable_id", "interest_id"], "cable_id",
+            affix_cables,
+        )
     )
     walk_reg = {
-        k: list(v["walk"]) if v["walk"] is not None else None
-        for k, v in seed_keyed(
-            "_aux_walk", ["interest_id", "walk"], walk_interests
-        ).items()
+        k: list(walk) if walk is not None else None
+        for k, walk in sink_rows(
+            sink, "_aux_walk", ["interest_id", "walk"], "interest_id",
+            placement_interests | {i for i in placement_reg.values() if i is not None},
+        )
     }
     # container → route-node relation: the node_container table IS the
     # current relation (rows vanish on removal = cleared relation)
     relation = {k: None for k in rel_container_ids}
     relation.update(
-        {
-            k: v["route_node_id"]
-            for k, v in seed_keyed(
-                "node_container", ["id", "route_node_id"], sorted(rel_container_ids)
-            ).items()
-        }
+        sink_rows(
+            sink, "node_container", ["id", "route_node_id"], "id", rel_container_ids
+        )
     )
 
     nc_cols = [c for c, _ in TABLE_COLUMNS["node_container"]]
     term_cols = [c for c, _ in TABLE_COLUMNS["service_termination"]]
-    nc_states = seed_keyed("node_container", nc_cols, nc_ids)
-    term_states = seed_keyed("service_termination", term_cols, term_ids)
+    nc_states = {
+        row[0]: dict(zip(nc_cols, row))
+        for row in sink_rows(sink, "node_container", nc_cols, "id", nc_ids)
+    }
+    term_states = {
+        row[0]: dict(zip(term_cols, row))
+        for row in sink_rows(sink, "service_termination", term_cols, "id", term_ids)
+    }
 
     interest_final: dict[str, list | None] = {}
     cable_final: dict[str, list | None] = {}
@@ -743,23 +696,22 @@ def replay_rel_batch(
                     )
 
     # ---- deltas -----------------------------------------------------------
-    out: dict[str, tuple] = {}
+    out: dict[str, TableDelta | GroupDelta] = {}
     if nc_ids:
         rows = [nc_states[i] for i in nc_ids if i in nc_states]
         gone = [i for i in nc_ids if i not in nc_states]
-        out["node_container"] = ("keyed", _arrow(rows, nc_cols, {}), gone)
+        out["node_container"] = TableDelta(_arrow(rows, nc_cols, {}), gone)
     if term_ids:
         rows = [term_states[i] for i in term_ids if i in term_states]
         gone = [i for i in term_ids if i not in term_states]
-        out["service_termination"] = ("keyed", _arrow(rows, term_cols, {}), gone)
+        out["service_termination"] = TableDelta(_arrow(rows, term_cols, {}), gone)
     if interest_ids:
         rows = [
             {"interest_id": iid, "route_network_element_id": el, "seq_no": n + 1}
             for iid in interest_ids
             for n, el in enumerate(interest_final.get(iid) or [])
         ]
-        out["rel_interest_to_route_element"] = (
-            "group",
+        out["rel_interest_to_route_element"] = GroupDelta(
             list(interest_ids),
             _arrow(
                 rows,
@@ -775,8 +727,7 @@ def replay_rel_batch(
             if cable_final[cid] is not None
             for n, el in enumerate(cable_final[cid])
         ]
-        out["rel_fiber_cable_to_route_element"] = (
-            "group",
+        out["rel_fiber_cable_to_route_element"] = GroupDelta(
             triggered,
             _arrow(
                 rows,

@@ -7,11 +7,23 @@ suppressed, snapshots every table (truncate + COPY), then polls every
 * ``dehydrate`` — batch job: run all 8 projections over the full log, bulk
   overwrite the sink, persist the slack-end pre-aggregation, record the
   watermark (T2 bootstrap).
-* ``apply_batch`` — one micro-batch of incremental maintenance: affected-key
-  recompute (streaming/incremental.py) + keyed MERGE/DELETE, wrapped in a
-  sink transaction keyed by batch_id (T5: re-delivered batches are skipped,
-  and recompute-from-log is idempotent by construction — re-applying any
-  batch yields the same rows).
+* ``apply_batch`` — one micro-batch of incremental maintenance, on one of
+  two paths chosen once, before any work, from the bounded size probe and
+  the batch's min seq against the watermark:
+
+  - driver path (driver-sized, no overlap — every steady-state poll):
+    parse the probed rows, replay them over sink-seeded state
+    (streaming/replay.py), fold the spec registries and append the edge
+    deltas. It never builds, persists or scans the accumulated log.
+  - distributed path (oversized, or min seq ≤ watermark): the only place
+    the accumulated log is built and persisted; affected-key recompute
+    (streaming/incremental.compute_deltas) over it, and the aux tables are
+    always reseeded from it. Recompute-from-log is idempotent by
+    construction, so a re-delivered or overlapping batch lands here.
+
+  Both paths produce the same ``TableDelta``/``GroupDelta`` map and write
+  it with keyed MERGE/DELETE inside one sink transaction keyed by batch_id
+  (T5: re-delivered batch ids are skipped).
 * ``ProjectionStream`` — Structured Streaming wiring: file-source
   ``readStream`` over an envelope directory, ``foreachBatch`` into
   ``apply_batch``, default trigger processingTime=2s matching the
@@ -19,15 +31,17 @@ suppressed, snapshots every table (truncate + COPY), then polls every
   runs. Bronze accumulation is deduped on ``seq`` so a crash between bronze
   append and sink commit re-applies cleanly.
 
-Batch-order independence: because every batch recomputes its touched keys
-from the ACCUMULATED log, the final sink state depends only on the set of
-applied events, not the batch boundaries — the equivalence tests exploit
-this by splitting one log at random points.
+Batch-order independence: both paths yield fold(applied events) for the
+touched keys, so the final sink state depends only on the set of applied
+events, not the batch boundaries — the equivalence tests exploit this by
+splitting one log at random points.
 """
 
 from __future__ import annotations
 
 import os
+from collections import Counter
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -35,15 +49,16 @@ from open_ftth_relational_projector_spark.events.reader import EventLog
 from open_ftth_relational_projector_spark.events.schemas import ENVELOPE_SCHEMA
 from open_ftth_relational_projector_spark.projections import project_all
 from open_ftth_relational_projector_spark.projections.core import slack_ends
-from open_ftth_relational_projector_spark.sinks.ddl import SCHEMA
 from open_ftth_relational_projector_spark.streaming.replay import fold_spec_registry
 from open_ftth_relational_projector_spark.streaming.incremental import (
     GroupDelta,
     TableDelta,
+    affected_ids_distributed,
     affected_ids_from_rows,
     build_edge_context,
     compute_deltas,
     md5_uuid,
+    sink_rows,
 )
 
 
@@ -61,7 +76,6 @@ def aux_seed_frames(
         _parent_registry_versions,
         _span_state,
     )
-    from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
     from open_ftth_relational_projector_spark.streaming.replay import STATE_COLS
 
     if state is None:
@@ -194,34 +208,46 @@ def apply_slack_delta(sink, delta: GroupDelta) -> None:
     increment/decrement counters (ProjektorState.cs:473-512), including the
     delete-at-zero behavior (:505-511).
     """
+    import pyarrow as pa
+
     eq = delta.group_keys
     if not eq:
         return
-    ph = ", ".join("?" for _ in eq)
-    old_nodes = set(
-        sink.fetch_df(
-            f'SELECT DISTINCT route_node_id FROM {SCHEMA}."_aux_slack_end" '
-            f"WHERE span_equipment_id IN ({ph})",
-            eq,
-        )["route_node_id"]
-    )
+    node = ["route_node_id"]
+    touched = {
+        n for (n,) in sink_rows(sink, "_aux_slack_end", node, "span_equipment_id", eq)
+    }
     sink.replace_group("_aux_slack_end", eq, delta.rows)
-    new_nodes = set(delta.rows.column("route_node_id").to_pylist())
-    touched = sorted(old_nodes | new_nodes)
-    if not touched:
-        return
-    ph = ", ".join("?" for _ in touched)
-    counts = sink.fetch_df(
-        f'SELECT route_node_id, CAST(COUNT(*) AS INTEGER) AS number_of_ends '
-        f'FROM {SCHEMA}."_aux_slack_end" WHERE route_node_id IN ({ph}) '
-        f"GROUP BY route_node_id",
-        touched,
+    touched.update(delta.rows.column("route_node_id").to_pylist())
+    counts = Counter(
+        n for (n,) in sink_rows(sink, "_aux_slack_end", node, "route_node_id", touched)
     )
-    if len(counts):
-        counts["id"] = counts["route_node_id"].map(md5_uuid)
-        sink.merge("conduit_slack", counts)
-    zero = [n for n in touched if n not in set(counts["route_node_id"])]
-    sink.delete_keys("conduit_slack", "route_node_id", zero)
+    if counts:
+        nodes = sorted(counts)
+        sink.merge(
+            "conduit_slack",
+            pa.table(
+                {
+                    "id": [md5_uuid(n) for n in nodes],
+                    "route_node_id": nodes,
+                    "number_of_ends": pa.array([counts[n] for n in nodes], pa.int32()),
+                }
+            ),
+        )
+    sink.delete_keys(
+        "conduit_slack", "route_node_id", sorted(n for n in touched if n not in counts)
+    )
+
+
+def _write_deltas(sink, deltas: dict[str, TableDelta | GroupDelta]) -> None:
+    for table, delta in deltas.items():
+        if table == "_aux_slack_end":
+            apply_slack_delta(sink, delta)
+        elif isinstance(delta, GroupDelta):
+            sink.replace_group(table, delta.group_keys, delta.rows)
+        else:
+            sink.merge(table, delta.upserts)
+            sink.delete_keys(table, "id", delta.delete_keys)
 
 
 def _probe_collect(batch_envelopes: DataFrame, cap: int) -> list:
@@ -241,175 +267,137 @@ def apply_batch(
     batch_envelopes: DataFrame,
     sink,
     batch_id: int | None = None,
-    persist_full: bool = True,
     probe_seq_first: bool = False,
 ) -> bool:
     """Apply one micro-batch incrementally. Returns False if skipped
     (already-applied batch_id — T5 exactly-once).
 
-    ``persist_full=False`` skips caching the accumulated log for callers
-    whose ``full_envelopes`` already derives from a cached/materialized
-    source (re-filtering a cached parent is cheaper than building another
-    cache of the same rows every batch).
+    ``full_envelopes`` (the accumulated log, batch included) is read only
+    on the distributed path; a driver-path batch never touches it.
 
     ``probe_seq_first=True`` sizes the batch with a seq-ONLY probe before
     touching payloads, so an oversized batch never materializes cap+1 raw
-    payload strings on the driver (r7 advisor carry-over: the last
-    driver-memory spike lived on exactly the backlog path). Costs one
-    extra tiny job when the batch turns out driver-sized — callers set it
-    only where backlog is plausible (the first micro-batch after a
-    (re)start); steady-state 2 s triggers keep the single-job full probe."""
+    payload strings on the driver. Costs one extra tiny job when the batch
+    turns out driver-sized — callers set it only where backlog is
+    plausible (the first micro-batch after a (re)start); steady-state 2 s
+    triggers keep the single-job full probe."""
     if batch_id is not None and sink.get_meta("applied_batch") == str(batch_id):
         return False
 
     from open_ftth_relational_projector_spark.streaming.incremental import (
-        MAX_DRIVER_BATCH_ROWS,
-        affected_ids_distributed,
-    )
-
-    # Size-gate the batch with a PROBE collect of cap+1 rows: the common
-    # driver-sized case (every 2 s-trigger micro-batch) stays at ONE Spark
-    # job — the probe IS the collected batch, and min/max seq derive
-    # driver-side. Only the rare oversized case (post-downtime backlog in
-    # one batch) pays a second job for min/max; its probe pull is bounded
-    # at cap+1 rows by construction. Payload JSON parses only AFTER
-    # driver_sized is confirmed (round-6 advice: the oversized path was
-    # paying ~cap json.loads for rows it immediately discarded).
-    from open_ftth_relational_projector_spark.streaming.incremental import (
+        MAX_DRIVER_BATCH_ROWS as cap,
         parse_envelope_rows,
     )
 
+    # Size-gate with a PROBE collect of cap+1 rows: a driver-sized batch
+    # (every 2 s-trigger micro-batch) costs ONE Spark job — the probe IS
+    # the collected batch and min/max seq derive driver-side. Only an
+    # oversized batch pays a second job for min/max; payloads parse only
+    # once the batch is known to be driver-sized.
     if probe_seq_first:
-        # backlog-plausible caller: size on seq alone (≤ cap+1 longs on
-        # the driver), then pull payloads only once driver_sized is known
-        seq_rows = (
-            batch_envelopes.select("seq")
-            .limit(MAX_DRIVER_BATCH_ROWS + 1)
-            .collect()
-        )
-        driver_sized = len(seq_rows) <= MAX_DRIVER_BATCH_ROWS
-        probe_rows = (
-            _probe_collect(batch_envelopes, MAX_DRIVER_BATCH_ROWS)
-            if driver_sized
-            else []
-        )
+        seq_rows = batch_envelopes.select("seq").limit(cap + 1).collect()
+        driver_sized = len(seq_rows) <= cap
+        probe_rows = _probe_collect(batch_envelopes, cap) if driver_sized else []
     else:
-        probe_rows = _probe_collect(batch_envelopes, MAX_DRIVER_BATCH_ROWS)
-        driver_sized = len(probe_rows) <= MAX_DRIVER_BATCH_ROWS
+        probe_rows = _probe_collect(batch_envelopes, cap)
+        driver_sized = len(probe_rows) <= cap
     if driver_sized:
         parsed = parse_envelope_rows(probe_rows)
         seqs = [s for s, _, _ in parsed]
-        batch_min = min(seqs, default=None)
-        batch_max = max(seqs, default=None)
+        batch_min, batch_max = min(seqs, default=None), max(seqs, default=None)
     else:
         parsed = None
-        stat = batch_envelopes.agg(
-            F.min("seq").alias("mn"), F.max("seq").alias("mx")
-        ).collect()[0]
-        batch_min = int(stat["mn"])
-        batch_max = int(stat["mx"])
-    # materialize the typed streams once per batch: every per-table delta
-    # re-reads several of them, and without this each recompute re-filters
-    # and re-parses the accumulated envelope log
-    full_log = EventLog.from_envelopes(full_envelopes)
-    if persist_full:
-        full_log = full_log.persisted()
-    batch_log = None
-    if parsed is None:
-        # oversized batch: touched keys come from a distributed distinct
-        # aggregation — only the id LISTS reach the driver
-        batch_log = EventLog.from_envelopes(batch_envelopes).persisted()
+        stat = batch_envelopes.agg(F.min("seq"), F.max("seq")).collect()[0]
+        batch_min, batch_max = int(stat[0]), int(stat[1])
+    watermark = int(sink.get_meta("watermark") or 0)
+    txn = _batch_transaction(sink, batch_id, batch_max, watermark)
+    # The driver-side replays require sink state == fold(log ∖ batch); a
+    # re-delivered/overlapping batch (min seq ≤ watermark) violates that.
+    if driver_sized and (batch_min is None or batch_min > watermark):
+        _apply_on_driver(parsed, sink, txn)
+    else:
+        _apply_distributed(full_envelopes, batch_envelopes, parsed, sink, txn)
+    return True
+
+
+@contextmanager
+def _batch_transaction(sink, batch_id, batch_max, watermark: int):
+    """One sink transaction: the batch's writes plus its bookkeeping
+    (applied batch_id, advanced watermark), rolled back together."""
+    sink.begin()
     try:
-        from open_ftth_relational_projector_spark.streaming.replay import (
-            replay_lww_tables,
-            replay_rel_batch,
-        )
+        yield
+        if batch_id is not None:
+            sink.set_meta("applied_batch", str(batch_id))
+        if batch_max is not None:
+            sink.set_meta("watermark", str(max(watermark, batch_max)))
+        sink.commit()
+    except Exception:
+        sink.rollback()
+        raise
 
-        ids = (
-            affected_ids_from_rows(parsed)
-            if parsed is not None
-            else affected_ids_distributed(batch_log)
-        )
 
-        # The driver-side replays require sink state == fold(log ∖ batch).
-        # A re-delivered/overlapping batch (batch min seq ≤ watermark)
-        # violates that, so it takes the distributed recompute, which is
-        # idempotent by construction (pure function of the accumulated log).
-        prev_wm = int(sink.get_meta("watermark") or 0)
-        overlap = batch_min is not None and batch_min <= prev_wm
-        driver_ok = driver_sized and not overlap
+def _apply_on_driver(parsed: list[tuple[int, str, dict]], sink, txn) -> None:
+    """Driver path: every read and replay runs before the transaction,
+    with zero Spark jobs; the accumulated log is never built."""
+    from open_ftth_relational_projector_spark.streaming import replay
 
-        edge_ctx = (
-            build_edge_context(full_log, parsed, ids, sink)
-            if parsed is not None and not overlap
-            else None
+    ids = affected_ids_from_rows(parsed)
+    edge_ctx = build_edge_context(parsed, ids, sink)
+    span = (
+        replay.replay_span_batch(
+            parsed, ids["span"], edge_ctx.all_eq, edge_ctx.has_child, sink
         )
-        # join-free LWW tables replay straight against the sink's public
-        # rows (zero Spark jobs) whenever the batch is driver-sized
-        driver_deltas: dict[str, TableDelta | GroupDelta] = {}
-        if driver_ok:
-            for table, (up, gone) in replay_lww_tables(parsed, ids, sink).items():
-                driver_deltas[table] = TableDelta(upserts=up, delete_keys=gone)
-            for table, res in replay_rel_batch(parsed, ids, sink).items():
-                if res[0] == "keyed":
-                    driver_deltas[table] = TableDelta(
-                        upserts=res[1], delete_keys=res[2]
-                    )
-                else:
-                    driver_deltas[table] = GroupDelta(
-                        group_keys=res[1], rows=res[2]
-                    )
-        deltas = compute_deltas(
-            full_log, ids, edge_ctx=edge_ctx, skip=tuple(driver_deltas)
-        )
-        deltas.update(driver_deltas)
+        if edge_ctx is not None
+        else None
+    )
+    deltas = {
+        **replay.replay_lww_tables(parsed, ids, sink),
+        **replay.replay_rel_batch(parsed, ids, sink),
+        **(span.deltas if span is not None else {}),
+    }
+    with txn:
+        # spec registries are dimension streams — fold them EVERY batch (a
+        # spec-only batch must still land in the aux registry for later
+        # batches' placements to resolve against)
+        for name, tbl in fold_spec_registry(parsed).items():
+            sink.merge(name, tbl)
+        if edge_ctx is not None:
+            sink.append("_aux_affix_edge", edge_ctx.new_edges)
+            sink.append("_aux_root_segment", edge_ctx.new_registry)
+            sink.append("_aux_detach", edge_ctx.new_detaches)
+            sink.merge("_aux_span_state", span.state_upserts)
+            sink.delete_keys("_aux_span_state", "id", span.state_deletes)
+        _write_deltas(sink, deltas)
 
-        sink.begin()
-        try:
-            # spec registries are dimension streams — fold them EVERY batch
-            # (a spec-only batch must still land in the aux registry for
-            # later batches' placements to resolve against)
-            if parsed is not None:
-                for name, tbl in fold_spec_registry(parsed).items():
-                    sink.merge(name, tbl)
-            if edge_ctx is not None:
-                sink.append("_aux_affix_edge", edge_ctx.new_edges)
-                sink.append("_aux_root_segment", edge_ctx.new_registry)
-                sink.append("_aux_detach", edge_ctx.new_detaches)
-                rr = edge_ctx.span_replay
-                if rr is not None:
-                    sink.merge("_aux_span_state", rr.state_upserts)
-                    sink.delete_keys("_aux_span_state", "id", rr.state_deletes)
-            elif parsed is None or ids.get("span") or ids.get("cable"):
-                # distributed fallback (overlap/giant batch): the aux sets
-                # — including the spec/walk registries an oversized batch
-                # never folded driver-side — are reseeded wholesale from
-                # the accumulated log (the fallback is already ∝ log).
-                for name, df in aux_seed_frames(full_log).items():
-                    sink.overwrite(name, df)
-            for table, delta in deltas.items():
-                if table == "_aux_slack_end":
-                    apply_slack_delta(sink, delta)
-                elif isinstance(delta, GroupDelta):
-                    sink.replace_group(table, delta.group_keys, delta.rows)
-                elif isinstance(delta, TableDelta):
-                    sink.merge(table, delta.upserts)
-                    sink.delete_keys(table, "id", delta.delete_keys)
-            if batch_id is not None:
-                sink.set_meta("applied_batch", str(batch_id))
-            # batch_max came from the sizing aggregate — no extra job
-            if batch_max is not None:
-                prev = int(sink.get_meta("watermark") or 0)
-                sink.set_meta("watermark", str(max(prev, int(batch_max))))
-            sink.commit()
-        except Exception:
-            sink.rollback()
-            raise
+
+def _apply_distributed(
+    full_envelopes: DataFrame, batch_envelopes: DataFrame, parsed, sink, txn
+) -> None:
+    """Distributed path: the only place the accumulated log is built and
+    persisted. ``parsed`` is None for an oversized batch, whose touched
+    keys then come from a distributed distinct aggregation (only the id
+    LISTS reach the driver)."""
+    full_log = EventLog.from_envelopes(full_envelopes).persisted()
+    batch_log = None
+    try:
+        if parsed is not None:
+            ids = affected_ids_from_rows(parsed)
+        else:
+            batch_log = EventLog.from_envelopes(batch_envelopes).persisted()
+            ids = affected_ids_distributed(batch_log)
+        deltas = compute_deltas(full_log, ids)
+        with txn:
+            # the aux sets — including the spec/walk registries an
+            # oversized batch never folded driver-side — reseed wholesale
+            # from the accumulated log this path already scans
+            for name, df in aux_seed_frames(full_log).items():
+                sink.overwrite(name, df)
+            _write_deltas(sink, deltas)
     finally:
         full_log.unpersist()
         if batch_log is not None:
             batch_log.unpersist()
-    return True
 
 
 class ProjectionStream:
@@ -454,8 +442,14 @@ class ProjectionStream:
         if batch_df.isEmpty():
             return
         batch_df.write.mode("append").parquet(self.bronze_dir)
-        # seq-dedup guards the crash window between append and sink commit
-        full = self.spark.read.parquet(self.bronze_dir).dropDuplicates(["seq"])
+        # seq-dedup guards the crash window between append and sink commit;
+        # the explicit schema skips a footer-inference job on every batch
+        # (apply_batch reads this frame only on its distributed path)
+        full = (
+            self.spark.read.schema(ENVELOPE_SCHEMA)
+            .parquet(self.bronze_dir)
+            .dropDuplicates(["seq"])
+        )
         batch = batch_df.dropDuplicates(["seq"])
         apply_batch(
             full,

@@ -36,3 +36,43 @@ def test_catalog_query_persists_are_query_scoped(spark):
     df = SPARK_QUERIES["corpus_pipeline_stats"](spark, "/root/testdata/sf0.001")
     df.write.format("noop").mode("overwrite").save()
     assert release_tracked_persists(spark) >= 1
+
+
+def test_event_log_release_leaves_registry_unchanged(spark, monkeypatch):
+    """An EventLog unpersists through the cache registry: dehydrate plus
+    three forced-fallback batches (each persists the accumulated and the
+    batch log) leave the registry as long as they found it."""
+    import open_ftth_relational_projector_spark.streaming.incremental as I
+    from open_ftth_relational_projector_spark.cache import _REG_ATTR
+    from open_ftth_relational_projector_spark.events.generator import (
+        generate,
+        to_envelope_rows,
+    )
+    from open_ftth_relational_projector_spark.events.schemas import ENVELOPE_SCHEMA
+    from open_ftth_relational_projector_spark.sinks import DuckDBSink
+    from open_ftth_relational_projector_spark.streaming.runner import (
+        apply_batch,
+        dehydrate,
+    )
+
+    def registered() -> int:
+        return len(getattr(spark, _REG_ATTR, None) or [])
+
+    env = spark.createDataFrame(
+        to_envelope_rows(generate(seed=5, scale=3)), ENVELOPE_SCHEMA
+    ).cache()
+    max_seq = env.agg({"seq": "max"}).collect()[0][0]
+    bounds = [int(max_seq * f) for f in (0.4, 0.6, 0.8)] + [max_seq]
+    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 0)
+    before = registered()
+    sink = DuckDBSink()
+    dehydrate(env.filter(f"seq <= {bounds[0]}"), sink)
+    for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+        apply_batch(
+            env.filter(f"seq <= {hi}"),
+            env.filter(f"seq > {lo} AND seq <= {hi}"),
+            sink,
+            batch_id=i,
+        )
+    assert registered() == before
+    env.unpersist(False)

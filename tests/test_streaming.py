@@ -203,7 +203,6 @@ def test_edge_context_resolves_against_sink_registry(spark):
     """A batch affix referencing a root segment REGISTERED IN AN EARLIER
     BATCH must resolve through the sink aux registry, and an intervening
     removal must tombstone it."""
-    from open_ftth_relational_projector_spark.events.reader import EventLog
     from open_ftth_relational_projector_spark.streaming.incremental import (
         build_edge_context,
     )
@@ -229,8 +228,7 @@ def test_edge_context_resolves_against_sink_registry(spark):
           "newUtilityHopList": [{"parentAffixes": [{"spanSegmentId": "seg-p2"}]}]}),
     ]
     ids = {"span": ["c1", "c2"], "cable": ["c1", "c2"]}
-    full = EventLog.from_typed(spark, {})
-    ctx = build_edge_context(full, parsed, ids, sink)
+    ctx = build_edge_context(parsed, ids, sink)
     resolved = sorted(
         zip(
             ctx.new_edges.column("child_id").to_pylist(),
@@ -352,13 +350,28 @@ def test_apply_batch_large_batch_fallback(spark, monkeypatch):
     _assert_sink_matches(sink, expected)
 
 
+def test_driver_path_never_reads_accumulated_log(spark, envelopes, expected_tables):
+    """A driver-sized, non-overlapping batch is replayed from its own rows
+    and the sink alone: an accumulated log that raises on any scan must go
+    untouched, and the sink still equals the batch fold."""
+    from pyspark.sql import functions as F
+
+    max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
+    cut = max_seq // 2
+    sink = DuckDBSink()
+    dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
+    poisoned = envelopes.filter(F.raise_error("accumulated log scanned").isNull())
+    assert apply_batch(poisoned, envelopes.filter(f"seq > {cut}"), sink, batch_id=0)
+    _assert_sink_matches(sink, expected_tables)
+
+
 def test_affected_ids_distributed_matches_driver_extraction(spark):
     """The no-collect key extraction must name exactly the same touched
     entities per domain as the driver-side parsed-payload walk."""
     from open_ftth_relational_projector_spark.streaming.incremental import (
         affected_ids_distributed,
         affected_ids_from_rows,
-        collect_batch,
+        parse_envelope_rows,
     )
 
     env = spark.createDataFrame(
@@ -366,7 +379,9 @@ def test_affected_ids_distributed_matches_driver_extraction(spark):
     ).cache()
     max_seq = env.agg({"seq": "max"}).collect()[0][0]
     batch = env.filter(f"seq > {int(max_seq * 0.4)}")
-    via_driver = affected_ids_from_rows(collect_batch(batch))
+    via_driver = affected_ids_from_rows(
+        parse_envelope_rows(batch.select("seq", "event_type", "payload").collect())
+    )
     via_spark = affected_ids_distributed(EventLog.from_envelopes(batch))
     assert via_spark == via_driver
 
