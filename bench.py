@@ -200,7 +200,7 @@ def bench_domain_projection(spark, scale: int = 60) -> tuple[str, float]:
         to_envelope_rows(generate(seed=42, scale=scale)), ENVELOPE_SCHEMA
     ).coalesce(8)
     with _domain_conf(spark, 8):
-        tables = project_all(EventLog.from_envelopes(raw))
+        tables = project_all(EventLog.from_envelopes(raw).persisted())
         materialize_counts(tables)
     return "domain_projection_8tables", time.perf_counter() - t0
 

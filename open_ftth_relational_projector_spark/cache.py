@@ -24,9 +24,14 @@ recomputes to the same values if ever re-referenced.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 _REG_ATTR = "_ofrp_tracked_persists"
+# guards registry creation, append and removal: frames are registered from
+# build threads (project_all's 8 plan builders, curation's worker branch)
+_REG_LOCK = threading.Lock()
 
 
 def tracked_persist(df: DataFrame, level: str | None = None) -> DataFrame:
@@ -42,11 +47,12 @@ def tracked_persist(df: DataFrame, level: str | None = None) -> DataFrame:
     else:
         df.persist()
     spark = df.sparkSession
-    reg = getattr(spark, _REG_ATTR, None)
-    if reg is None:
-        reg = []
-        setattr(spark, _REG_ATTR, reg)
-    reg.append(df)
+    with _REG_LOCK:
+        reg = getattr(spark, _REG_ATTR, None)
+        if reg is None:
+            reg = []
+            setattr(spark, _REG_ATTR, reg)
+        reg.append(df)
     return df
 
 
@@ -56,9 +62,10 @@ def release_persist(df: DataFrame) -> None:
     ``EventLog`` unpersisting its log), so the registry never keeps a
     frame whose blocks are already gone."""
     df.unpersist()
-    reg = getattr(df.sparkSession, _REG_ATTR, None)
-    if reg:
-        reg[:] = [d for d in reg if d is not df]
+    with _REG_LOCK:
+        reg = getattr(df.sparkSession, _REG_ATTR, None)
+        if reg:
+            reg[:] = [d for d in reg if d is not df]
 
 
 def release_tracked_persists(spark: SparkSession) -> int:
@@ -67,16 +74,16 @@ def release_tracked_persists(spark: SparkSession) -> int:
     blocking=False: block deletion proceeds asynchronously — the caller
     only needs the CacheManager entries gone so the next plan/measurement
     cannot read through a stale cache. Safe to call at any point between
-    queries; a no-op when nothing is registered.
+    queries; a no-op when nothing is registered. Frames registered while
+    this runs stay registered for the next release.
     """
-    reg = getattr(spark, _REG_ATTR, None)
-    n = 0
-    if reg:
-        for df in reg:
-            try:
-                df.unpersist(False)
-            except Exception:  # pragma: no cover — session teardown races
-                pass
-            n += 1
+    with _REG_LOCK:
+        reg = getattr(spark, _REG_ATTR, None) or []
+        frames = list(reg)
         reg.clear()
-    return n
+    for df in frames:
+        try:
+            df.unpersist(False)
+        except Exception:  # pragma: no cover — session teardown races
+            pass
+    return len(frames)

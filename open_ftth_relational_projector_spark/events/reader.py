@@ -13,12 +13,20 @@ while production reads JSON envelopes.
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from open_ftth_relational_projector_spark.cache import release_persist, tracked_persist
 from open_ftth_relational_projector_spark.events.schemas import (
     ENVELOPE_SCHEMA,
     PAYLOAD_SCHEMAS,
 )
+
+# serialized in memory, spilling to disk: the envelope log is the largest
+# frame a fold caches
+_LEVEL = "MEMORY_AND_DISK"
 
 
 class EventLog:
@@ -33,10 +41,16 @@ class EventLog:
         typed: dict[str, DataFrame],
         spark: SparkSession,
         raw: DataFrame | None = None,
+        persistent: bool = False,
     ):
         self._typed = typed
         self._spark = spark
         self._raw = raw
+        self._persistent = persistent
+        self._memo: dict[str, DataFrame] = {}
+        self._memo_locks: dict[str, threading.Lock] = {}
+        self._lock = threading.Lock()
+        self._cached: list[DataFrame] = []
 
     @classmethod
     def from_envelopes(cls, raw: DataFrame) -> "EventLog":
@@ -70,47 +84,64 @@ class EventLog:
         # absent type → empty DataFrame with the right flattened schema
         return self._spark.createDataFrame([], _flat_schema(event_type))
 
-    def persisted(self, level: str = "MEMORY_AND_DISK", eager: bool = True) -> "EventLog":
-        """Stop consumers re-reading the envelope source.
+    def persisted(self) -> "EventLog":
+        """A log that caches: its source frames now, and every shared
+        substream built with ``memo(cache=True)`` when it is first built.
 
-        When the log came from envelopes, persist the RAW envelope frame and
-        prime it eagerly: the ~27 typed streams then re-derive from the
-        cached scan, and a type's filter+parse over a cached partition is
+        When the log came from envelopes, the RAW envelope frame is
+        persisted: the ~27 typed streams then re-derive from the cached
+        scan, and a type's filter+parse over a cached partition is
         microseconds — materializing 27 separate caches costs far more in
         stage scheduling than the parse it saves (measured 2× on the full
         8-table fold). For a typed-injection log there is no raw frame, so
-        each typed stream persists lazily instead. At 100 TB the same role
-        is played by a durable typed-bronze layer (sources/bronze.py): one
+        each typed stream persists instead. At 100 TB the same role is
+        played by a durable typed-bronze layer (sources/bronze.py): one
         parse, N pruned columnar scans.
 
-        ``eager=False`` skips the priming count: a caller that immediately
-        primes a DERIVED frame in the background (project_all's span-state
-        count computes through the cache and fills it as a byproduct) can
-        overlap the materialization with its own driver-side plan building
-        instead of blocking on a count job first (r12, guide §1.2 — the
-        blocking count was ~40% of the warm domain-fold wall). First-touch
-        races then duplicate at most one partition set's parse — the
-        bounded, documented trade of plans/concurrency.py.
+        Nothing is primed here: the first job over the log fills the
+        cache, and projections.core.project_all decides what to prime.
+        Every frame goes through the session cache registry, and
+        ``unpersist`` releases all of them.
         """
-        from open_ftth_relational_projector_spark.cache import tracked_persist
-
-        # tracked (r13): callers that loop over many logs/queries (bench,
-        # oracle sweeps) release these session-wide between queries;
-        # single-log consumers (dehydrate) still unpersist explicitly.
         if self._raw is not None:
-            raw = tracked_persist(self._raw, level)
-            if eager:
-                raw.count()
-            return EventLog.from_envelopes(raw)
+            return EventLog(
+                {}, self._spark, raw=tracked_persist(self._raw, _LEVEL), persistent=True
+            )
         return EventLog(
-            {t: tracked_persist(df, level) for t, df in self._typed.items()},
+            {t: tracked_persist(df, _LEVEL) for t, df in self._typed.items()},
             self._spark,
+            persistent=True,
         )
 
-    def unpersist(self) -> None:
-        from open_ftth_relational_projector_spark.cache import release_persist
+    @property
+    def is_persisted(self) -> bool:
+        return self._persistent
 
-        for df in [self._raw] if self._raw is not None else self._typed.values():
+    def memo(
+        self, name: str, build: Callable[["EventLog"], DataFrame], cache: bool
+    ) -> DataFrame:
+        """``build(self)``, built once per log under ``name``.
+
+        Concurrent callers (project_all's build threads) wait for the one
+        build in flight, so a plan is constructed — and, on a persisted
+        log with ``cache``, persisted and registered — exactly once. A
+        build that raises stores nothing; the next caller retries it.
+        """
+        with self._lock:
+            lock = self._memo_locks.setdefault(name, threading.Lock())
+        with lock:
+            if name not in self._memo:
+                df = build(self)
+                if cache and self._persistent:
+                    df = tracked_persist(df)
+                    self._cached.append(df)
+                self._memo[name] = df
+            return self._memo[name]
+
+    def unpersist(self) -> None:
+        """Release the source frames and every cached substream."""
+        sources = [self._raw] if self._raw is not None else list(self._typed.values())
+        for df in sources + self._cached:
             release_persist(df)
 
     def restricted(

@@ -6,6 +6,14 @@ names of the reference DDL (Database/PostgresWriter.cs:27, 118, 211, 306,
 field updates), asof_join (state-at-event-time lookups), subtract_hops (X2),
 explode_with_seq (W1/X1), array_distinct (A3).
 
+This module is the one definition of the fold's shared substreams (span
+state, affix edges, has-child flags, spec registries, walk versions). Each
+is a function of the EventLog alone, built once per log; the span state and
+the edges cache on a persisted log and are released with it
+(EventLog.unpersist). ``sink_frames`` yields a frame for every sink table —
+the 8 projections, the slack-end pre-aggregation and the aux seeds — and is
+what both dehydration and the catch-up rewrite load.
+
 Faithfulness notes (verified against the reference fold, see events/oracle.py):
   * is_customer_conduit frozen at placement (SpanEquipmentState.cs:53).
   * cable→route-element rows are (re)computed at placement-if-spec-cable,
@@ -22,6 +30,8 @@ Faithfulness notes (verified against the reference fold, see events/oracle.py):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, functions as F
 
 from open_ftth_relational_projector_spark.events.reader import EventLog
@@ -37,38 +47,38 @@ from open_ftth_relational_projector_spark.operators.lww import (
 )
 from open_ftth_relational_projector_spark.operators.walk_hops import subtract_hops
 from open_ftth_relational_projector_spark.projections.base import fold_entity
+from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
 
 # --------------------------------------------------------------------------
 # shared sub-streams
 # --------------------------------------------------------------------------
 
 
-def _memo(log: EventLog, name: str, build) -> DataFrame:
-    """Per-log memo of shared substream PLANS (r12, guide §7.3 planning
-    time): _walk_versions/_span_placements are consumed by several of the 8
-    projections, and rebuilding the same asof-join/selectExpr chains per
-    consumer was pure driver-side py4j + Catalyst-analysis latency — plan
-    construction is ~75% of the warm 8-table fold wall at bench scale.
-    Memoizing the DataFrame object dedupes construction without changing
-    any plan (the same lazy frame is referenced instead of an identical
-    copy). Concurrent builders may race a miss and build twice — benign
-    (identical plans; dict assignment is atomic under the GIL)."""
-    memo = getattr(log, "_plan_memo", None)
-    if memo is None:
-        memo = {}
-        log._plan_memo = memo
-    if name not in memo:
-        memo[name] = build(log)
-    return memo[name]
+def _substream(cache: bool = False):
+    """Declare a shared substream: built once per log (EventLog.memo),
+    whichever of its consumers asks first. ``cache`` marks the frames that
+    several table jobs read in full; a persisted log caches those as they
+    are built and releases them with the log.
+
+    Memoizing reuses one plan object instead of rebuilding an identical
+    asof-join/selectExpr chain per consumer — driver-side py4j and
+    Catalyst-analysis latency, ~75% of the warm 8-table fold wall at
+    bench scale — and changes no plan."""
+
+    def wrap(build):
+        @functools.wraps(build)
+        def get(log: EventLog) -> DataFrame:
+            return log.memo(build.__name__, build, cache)
+
+        return get
+
+    return wrap
 
 
+@_substream()
 def _walk_versions(log: EventLog) -> DataFrame:
     """Interest-walk state versions: registered ∪ modified, stored deduped
     (ProjektorState.cs:101, 106)."""
-    return _memo(log, "walk_versions", _walk_versions_build)
-
-
-def _walk_versions_build(log: EventLog) -> DataFrame:
     reg = log.of("WalkOfInterestRegistered").selectExpr(
         "interest.id AS interest_id",
         "seq",
@@ -82,14 +92,55 @@ def _walk_versions_build(log: EventLog) -> DataFrame:
     return reg.unionByName(mod)
 
 
+# spec registries: dimension streams (bounded however big the fact log
+# gets), read as-of by the projections and folded latest-wins into the aux
+# registries the driver-side replay resolves against
+
+
+@_substream()
+def _span_spec_versions(log: EventLog) -> DataFrame:
+    return log.of("SpanEquipmentSpecificationAdded").selectExpr(
+        "specification.id AS spec_id",
+        "seq",
+        "specification.name AS spec_name",
+        "specification.isCable AS spec_is_cable",
+        "specification.rootTemplate.spanStructureSpecificationId"
+        " AS struct_spec_id",
+    )
+
+
+@_substream()
+def _struct_spec_versions(log: EventLog) -> DataFrame:
+    return log.of("SpanStructureSpecificationAdded").selectExpr(
+        "specification.id AS struct_spec_id",
+        "seq",
+        "specification.outerDiameter AS outer_diameter",
+    )
+
+
+@_substream()
+def _nc_spec_versions(log: EventLog) -> DataFrame:
+    return log.of("NodeContainerSpecificationAdded").selectExpr(
+        "specification.id AS spec_id",
+        "seq",
+        "specification.name AS spec_name",
+        "specification.category AS spec_category",
+    )
+
+
+@_substream()
+def _term_spec_versions(log: EventLog) -> DataFrame:
+    return log.of("TerminalEquipmentSpecificationAdded").selectExpr(
+        "specification.id AS spec_id",
+        "seq",
+        "specification.isCustomerTermination AS is_customer_termination",
+    )
+
+
+@_substream()
 def _span_placements(log: EventLog) -> DataFrame:
-    """Placement events with all derived per-event fields + as-of spec joins.
-    Memoized per log (see _memo): built by the span-state fold AND the
-    fiber-cable projection."""
-    return _memo(log, "span_placements", _span_placements_build)
-
-
-def _span_placements_build(log: EventLog) -> DataFrame:
+    """Placement events with all derived per-event fields + as-of spec
+    joins; read by the span-state fold AND the fiber-cable projection."""
     eq = log.of("SpanEquipmentPlacedInRouteNetwork").selectExpr("seq", "equipment.*")
     segs = "flatten(spanStructures.spanSegments)"
     placed = eq.selectExpr(
@@ -115,27 +166,13 @@ def _span_placements_build(log: EventLog) -> DataFrame:
 
 
 def _with_span_spec(log: EventLog, facts: DataFrame) -> DataFrame:
-    """Chained as-of joins: spec_id → span spec → root structure spec."""
-    spec_v = log.of("SpanEquipmentSpecificationAdded").selectExpr(
-        "specification.id AS spec_id",
-        "seq",
-        "specification.name AS spec_name",
-        "specification.isCable AS spec_is_cable",
-        "specification.rootTemplate.spanStructureSpecificationId"
-        " AS struct_spec_id",
-    )
-    struct_v = log.of("SpanStructureSpecificationAdded").selectExpr(
-        "specification.id AS struct_spec_id",
-        "seq",
-        "specification.outerDiameter AS outer_diameter",
-    )
-    # spec registries are dimension streams (bounded however big the fact
-    # log gets), so both lookups are broadcast probes — no fact shuffle
-    out = asof_join_broadcast(facts, spec_v, "spec_id")
-    out = asof_join_broadcast(out, struct_v, "struct_spec_id")
-    return out
+    """Chained as-of joins: spec_id → span spec → root structure spec.
+    Both registries are broadcast probes — no fact shuffle."""
+    out = asof_join_broadcast(facts, _span_spec_versions(log), "spec_id")
+    return asof_join_broadcast(out, _struct_spec_versions(log), "struct_spec_id")
 
 
+@_substream(cache=True)
 def _span_state(log: EventLog) -> DataFrame:
     """Final per-equipment state (live rows only) — feeds the span_equipment
     table, conduit_slack, and the has-child timeline."""
@@ -275,38 +312,26 @@ def _resolve_edges(edge_events: DataFrame, registry: DataFrame) -> DataFrame:
     )
 
 
+@_substream(cache=True)
 def _parent_edges(log: EventLog) -> DataFrame:
     """Affix edges (child_id, seq, parent_id), parent resolved as of the
     edge event via the root-segment registry (ProjektorState.cs:358, 122)."""
     return _resolve_edges(_edge_events(log), _parent_registry_versions(log))
 
 
-def _has_child_final(
-    log: EventLog,
-    edges: DataFrame | None = None,
-    detaches: DataFrame | None = None,
-) -> DataFrame:
+@_substream()
+def _has_child_final(log: EventLog) -> DataFrame:
     """Final HasChildSpanEquipments per parent equipment id.
 
     Timeline per parent: affix edges referencing its root segment set TRUE
     (ProjektorState.cs:370-371); the FIRST detach of a child after an affix
     edge sets FALSE for that edge's parent (the child's parent list is
     cleared on detach, ProjektorState.cs:398-417). Last event wins.
-
-    ``edges``/``detaches`` let the incremental path feed sink-maintained
-    (child_id, seq, parent_id) / (child_id, seq) sets instead of
-    recomputing them from the full log (both are append-only, so a batch
-    only inserts rows); batch callers that already materialized
-    _parent_edges share one computation the same way.
     """
-    if edges is None:
-        edges = _parent_edges(log)
-
-    if detaches is None:
-        detaches = log.of("SpanEquipmentDetachedFromParent").selectExpr(
-            "spanEquipmentId AS child_id", "seq"
-        )
-    detaches = detaches.selectExpr("child_id", "seq AS detach_seq")
+    edges = _parent_edges(log)
+    detaches = log.of("SpanEquipmentDetachedFromParent").selectExpr(
+        "spanEquipmentId AS child_id", "seq AS detach_seq"
+    )
     cancels = (
         edges.join(detaches, "child_id", "left")
         .filter("detach_seq > seq")
@@ -407,12 +432,7 @@ def project_rel_fiber_cable_to_route_element(log: EventLog) -> DataFrame:
 
 def project_node_container(log: EventLog) -> DataFrame:
     """node_container(id, route_node_id, spec_name, spec_category)."""
-    spec_v = log.of("NodeContainerSpecificationAdded").selectExpr(
-        "specification.id AS spec_id",
-        "seq",
-        "specification.name AS spec_name",
-        "specification.category AS spec_category",
-    )
+    spec_v = _nc_spec_versions(log)
     placed = log.of("NodeContainerPlacedInRouteNetwork").selectExpr(
         "seq",
         "container.id AS id",
@@ -456,14 +476,10 @@ def project_node_container(log: EventLog) -> DataFrame:
     )
 
 
-def project_span_equipment(
-    log: EventLog, state: DataFrame | None = None
-) -> DataFrame:
+def project_span_equipment(log: EventLog) -> DataFrame:
     """span_equipment(id, interest_id, outer_diameter, is_cable, name,
     spec_name, access_address_id, unit_address_id)."""
-    if state is None:
-        state = _span_state(log)
-    return state.select(
+    return _span_state(log).select(
         "id",
         "interest_id",
         "outer_diameter",
@@ -478,11 +494,6 @@ def project_span_equipment(
 def project_service_termination(log: EventLog) -> DataFrame:
     """service_termination(id, route_node_id, name, access_address_id,
     unit_address_id)."""
-    spec_v = log.of("TerminalEquipmentSpecificationAdded").selectExpr(
-        "specification.id AS spec_id",
-        "seq",
-        "specification.isCustomerTermination AS is_customer_termination",
-    )
     # container → route-node relation versions (placement sets, removal clears)
     rel_set = log.of("NodeContainerPlacedInRouteNetwork").selectExpr(
         "container.id AS container_id",
@@ -507,7 +518,7 @@ def project_service_termination(log: EventLog) -> DataFrame:
     )
     # terminal-equipment spec registry: dimension stream → broadcast probe;
     # container→node relation scales with containers → keep the shuffle form
-    placed = asof_join_broadcast(placed, spec_v, "spec_id")
+    placed = asof_join_broadcast(placed, _term_spec_versions(log), "spec_id")
     placed = asof_join(placed, rel_v, "container_id")
     # the reference's three give-up guards (ProjektorState.cs:531-541)
     placed = placed.filter(
@@ -554,23 +565,16 @@ NODE_UUID_EXPR = (
 )
 
 
-def slack_ends(
-    log: EventLog,
-    state: DataFrame | None = None,
-    has_child: DataFrame | None = None,
-) -> DataFrame:
+def slack_ends(state: DataFrame, has_child: DataFrame) -> DataFrame:
     """Qualifying unconnected customer-conduit ends — the pre-aggregation of
     conduit_slack (ProjektorState.cs:449-471): one row
-    (span_equipment_id, route_node_id, end_kind) per slack end. The
-    incremental path persists this set keyed by equipment so a micro-batch
-    can replace one equipment's ends and re-aggregate only touched nodes;
-    it passes a key-restricted ``state`` but an unrestricted ``has_child``
-    (a parent's flag depends on OTHER children's affix edges).
+    (span_equipment_id, route_node_id, end_kind) per slack end. The sink
+    keeps this set keyed by equipment so a micro-batch can replace one
+    equipment's ends and re-aggregate only touched nodes. The inputs are
+    separate because compute_deltas joins a key-restricted ``state`` with
+    an unrestricted ``has_child`` (a parent's flag depends on OTHER
+    children's affix edges).
     """
-    if state is None:
-        state = _span_state(log)
-    if has_child is None:
-        has_child = _has_child_final(log)
     state = state.join(has_child, "id", "left").fillna(
         {"has_child": False}
     )
@@ -590,11 +594,7 @@ def slack_ends(
     return from_ends.unionAll(to_ends)
 
 
-def project_conduit_slack(
-    log: EventLog,
-    state: DataFrame | None = None,
-    has_child: DataFrame | None = None,
-) -> DataFrame:
+def project_conduit_slack(log: EventLog) -> DataFrame:
     """conduit_slack(id, route_node_id, number_of_ends).
 
     Recompute over final state: an end qualifies when the equipment is a
@@ -605,7 +605,7 @@ def project_conduit_slack(
     hashing.
     """
     counts = (
-        slack_ends(log, state=state, has_child=has_child)
+        slack_ends(_span_state(log), _has_child_final(log))
         .groupBy("route_node_id")
         .agg(F.count(F.lit(1)).cast("int").alias("number_of_ends"))
     )
@@ -684,60 +684,73 @@ PROJECTIONS = {
 }
 
 
-def project_all(
-    log: EventLog,
-    persist: bool = True,
-    state: DataFrame | None = None,
-    has_child: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """All 8 standing projections, sharing the expensive substreams.
+def project_all(log: EventLog) -> dict[str, DataFrame]:
+    """All 8 standing projections, sharing the log's substreams.
 
-    With ``persist`` (the default for multi-table materialization), the
-    envelope scan and the folded span-equipment state are cached and primed
-    so the 8 plans don't each re-read the source and re-fold the span
-    timeline — the local analogue of materializing typed bronze + a silver
-    state table at scale.
+    On a persisted log (``EventLog.persisted``) the span state and the
+    affix edges cache as they are built — the local analogue of typed
+    bronze + a silver state table at scale — and the span state is primed
+    once, before the table jobs that share it; the count fills the raw
+    envelope cache as a byproduct.
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    prime = None
-    pool0 = None
-    if persist and state is None:
-        # r12 (guide §1.2): skip the raw-prime COUNT JOB — the span-state
-        # prime below computes THROUGH the raw cache and fills it as a
-        # byproduct, so the blocking count bought nothing but a serial job
-        # before any plan could build (~40% of the warm fold wall). The
-        # state prime runs in a background thread, overlapping the
-        # materialization with the driver-side plan construction of the 8
-        # tables; a table-count job that beats the prime to a raw partition
-        # re-parses it once (the bounded first-touch trade documented in
-        # plans/concurrency.py).
-        from open_ftth_relational_projector_spark.cache import tracked_persist
-
-        log = log.persisted(eager=False)
-        state = tracked_persist(_span_state(log))
-        pool0 = ThreadPoolExecutor(1)
-        prime = pool0.submit(state.count)
-    elif persist:
-        log = log.persisted()
-    elif state is None:
-        state = _span_state(log)
-
-    def build(name):
-        fn = PROJECTIONS[name]
-        if name == "conduit_slack":
-            return name, fn(log, state=state, has_child=has_child)
-        if name == "span_equipment":
-            return name, fn(log, state=state)
-        return name, fn(log)
-
+    if log.is_persisted:
+        _span_state(log).count()
     # plan construction is driver-side py4j traffic — threads overlap the
-    # socket round-trips (each thread gets its own gateway connection); 8
-    # threads so every projection's build is in flight at once (r12 — the
-    # build cost is Catalyst analysis inside the JVM, which parallelizes)
-    with ThreadPoolExecutor(8) as pool:
-        out = dict(pool.map(build, PROJECTIONS))
-    if prime is not None:
-        prime.result()
-        pool0.shutdown()
-    return {name: out[name] for name in PROJECTIONS}
+    # socket round-trips (each thread gets its own gateway connection), one
+    # per projection so every build is in flight at once (the build cost is
+    # Catalyst analysis inside the JVM, which parallelizes)
+    with ThreadPoolExecutor(len(PROJECTIONS)) as pool:
+        return dict(pool.map(lambda n: (n, PROJECTIONS[n](log)), PROJECTIONS))
+
+
+def aux_seed_frames(log: EventLog) -> dict[str, DataFrame]:
+    """Aux-table seeds: the append-only edge sets plus the silver span
+    state and the latest-wins registries the driver-side micro-batch
+    replay (streaming/replay.py) seeds from."""
+    return {
+        "_aux_affix_edge": _parent_edges(log).select("child_id", "seq", "parent_id"),
+        "_aux_root_segment": _parent_registry_versions(log),
+        "_aux_detach": log.of("SpanEquipmentDetachedFromParent").selectExpr(
+            "spanEquipmentId AS child_id", "seq"
+        ),
+        "_aux_span_state": _span_state(log).select(
+            *[c for c, _ in TABLE_COLUMNS["_aux_span_state"]]
+        ),
+        "_aux_span_spec": latest_by_key(_span_spec_versions(log), "spec_id").selectExpr(
+            "spec_id", "spec_name AS name", "struct_spec_id", "spec_is_cable AS is_cable"
+        ),
+        "_aux_struct_spec": latest_by_key(
+            _struct_spec_versions(log), "struct_spec_id"
+        ).select("struct_spec_id", "outer_diameter"),
+        "_aux_nc_spec": latest_by_key(_nc_spec_versions(log), "spec_id").selectExpr(
+            "spec_id", "spec_name AS name", "spec_category AS category"
+        ),
+        "_aux_term_spec": latest_by_key(_term_spec_versions(log), "spec_id").select(
+            "spec_id", "is_customer_termination"
+        ),
+        "_aux_walk": latest_by_key(_walk_versions(log), "interest_id").select(
+            "interest_id", "seq", "walk"
+        ),
+        "_aux_cable_placement": latest_by_key(
+            log.of("SpanEquipmentPlacedInRouteNetwork").selectExpr(
+                "equipment.id AS cable_id",
+                "seq",
+                "equipment.walkOfInterestId AS interest_id",
+            ),
+            "cable_id",
+        ).select("cable_id", "seq", "interest_id"),
+    }
+
+
+def sink_frames(log: EventLog) -> dict[str, DataFrame]:
+    """A frame for every sink table but ``_projector_meta``: the 8
+    projections, the slack-end pre-aggregation and the aux seeds — what
+    dehydrate bulk-loads and what a catch-up batch overlapping the
+    watermark rewrites."""
+    return {
+        **project_all(log),
+        "_aux_slack_end": slack_ends(_span_state(log), _has_child_final(log)),
+        **aux_seed_frames(log),
+    }

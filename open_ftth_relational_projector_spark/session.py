@@ -12,6 +12,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the driver heap cap where host RAM is large or unknown
+MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def default_driver_memory() -> str:
+    """Half the host's RAM (MemTotal in /proc/meminfo), at most 24g: the
+    local driver JVM shares the host with the Python workers and the OS.
+    Hosts without /proc/meminfo get the cap."""
+    try:
+        with open("/proc/meminfo", encoding="ascii") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(MAX_DRIVER_MEM_MB, kb // 2048)}m"
+
 
 def get_spark(
     app_name: str = "open_ftth_relational_projector_spark",
@@ -21,7 +36,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    Honors SPARK_GRAFT_CPUS for local parallelism. On a real cluster the
+    Honors SPARK_GRAFT_CPUS for local parallelism and
+    SPARK_GRAFT_DRIVER_MEM for the driver heap (default: sized from the
+    host, ``default_driver_memory``). On a real cluster the
     master/deploy settings come from spark-submit; everything here is
     master-agnostic tuning.
     """
@@ -45,7 +62,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # The driver testdata stores events.ts as parquet TIMESTAMP(NANOS),

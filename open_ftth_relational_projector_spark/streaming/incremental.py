@@ -19,11 +19,12 @@ Correctness rests on per-key determinism: a key's final row depends only on
 the reference's incremental fold — verified by tests/test_streaming.py
 equivalence over random batch splits.
 
-runner.apply_batch takes this recompute (``compute_deltas``) only for the
-batches the driver-side replay (streaming/replay.py) cannot: oversized
-ones, and ones overlapping the watermark. The delta types, the touched-key
-extraction, the sink point lookup and the edge context here are shared
-with the driver path.
+runner.apply_batch takes this recompute (``compute_deltas``) only for
+oversized batches that arrive in order; driver-sized ones replay on the
+driver (streaming/replay.py), and one overlapping the watermark rewrites
+the sink from the full log. The delta types, the touched-key extraction,
+the sink point lookup and the edge context here are shared with the
+driver path.
 
 Scale: step 2's cost is ∝ events-of-touched-keys, reached through a
 broadcast semi-join that Catalyst pushes into the (bucketed-by-entity at
@@ -457,8 +458,7 @@ def compute_deltas(
     full: EventLog, ids: dict[str, list[str]]
 ) -> dict[str, TableDelta | GroupDelta]:
     """Recompute every affected row set against the accumulated log — the
-    distributed path for batches the driver-side replay cannot take
-    (oversized, or overlapping the watermark).
+    distributed path for oversized batches that arrive in order.
 
     Returns per-table deltas; ``_aux_slack_end`` carries the slack-end
     pre-aggregation whose node-level re-aggregation happens sink-side
@@ -526,36 +526,22 @@ def compute_deltas(
         )
 
     if ids.get("span"):
-        # recompute the superset's state and the has-child fold from the
-        # full log
+        # recompute the superset's state from the restricted log, and the
+        # has-child fold from the full log's (cached) edge set
         def _span_group(a=ids["span"], ids=ids):
-            edges = _parent_edges(full).persist()
-            all_eq, restricted, span_state = _span_state_superset(
-                full, ids, edges=edges
-            )
-            span_state = span_state.persist()
-            has_child_src = _has_child_final(full, edges=edges)
-            try:
-                state_a = _keyed_to(span_state, a)
-                span_df = project_span_equipment(restricted, state=state_a)
-                # has_child needs the UNRESTRICTED edge set (other
-                # children's affixes keep a parent flagged); filter to
-                # affected ids after the fold (ProjektorState.cs:360-368,
-                # 405-413 — the superset includes parents of touched
-                # children).
-                has_child = _keyed_to(has_child_src, all_eq)
-                ends_df = slack_ends(
-                    restricted, state=span_state, has_child=has_child
-                )
-                return {
-                    "span_equipment": _keyed_delta(span_df, a),
-                    "_aux_slack_end": GroupDelta(
-                        group_keys=all_eq, rows=ends_df.toArrow()
-                    ),
-                }
-            finally:
-                span_state.unpersist()
-                edges.unpersist()
+            all_eq, restricted, span_state = _span_state_superset(full, ids)
+            # has_child needs the UNRESTRICTED edge set (other children's
+            # affixes keep a parent flagged); filter to affected ids after
+            # the fold (ProjektorState.cs:360-368, 405-413 — the superset
+            # includes parents of touched children).
+            has_child = _keyed_to(_has_child_final(full), all_eq)
+            span_df = _keyed_to(project_span_equipment(restricted), a)
+            return {
+                "span_equipment": _keyed_delta(span_df, a),
+                "_aux_slack_end": GroupDelta(
+                    group_keys=all_eq, rows=slack_ends(span_state, has_child).toArrow()
+                ),
+            }
 
         thunks["_span_group"] = _span_group
 
@@ -595,7 +581,7 @@ def compute_deltas(
 
 
 def _span_state_superset(
-    full: EventLog, ids: dict[str, list[str]], edges: DataFrame | None = None
+    full: EventLog, ids: dict[str, list[str]]
 ) -> tuple[list[str], EventLog, DataFrame]:
     """Touched spans ∪ their affix parents, the span-entity streams
     restricted to that set, and the folded state over it.
@@ -603,15 +589,14 @@ def _span_state_superset(
     Parent expansion runs only when the batch actually carries edge-changing
     events (placement/affix/detach — the only flips of a parent's has-child
     flag, ProjektorState.cs:360-368, 405-413); address/move/spec/remove-only
-    batches skip the edge-set scan entirely. Pass ``edges`` to reuse an
-    already-persisted _parent_edges set.
+    batches skip the edge-set scan entirely.
     """
     span_ids = ids["span"]
     all_ids = set(span_ids)
     if ids.get("cable"):  # cable triggers == the edge-changing event types
         ids_df = _ids_df(full.spark, ids["cable"], "child_id")
         parents = (
-            (_parent_edges(full) if edges is None else edges)
+            _parent_edges(full)
             .join(F.broadcast(ids_df), "child_id", "left_semi")
             .select(F.col("parent_id").alias("id"))
             .distinct()

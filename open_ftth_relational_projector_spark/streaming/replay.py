@@ -14,8 +14,8 @@ only the touched rows. Spec registries ride along as sink aux tables
 Scale shape: sink reads and writes are indexed and ∝ batch; the replay is
 O(batch events); nothing scans the log. Batches above the driver threshold
 (incremental.MAX_DRIVER_BATCH_ROWS) or overlapping the watermark take the
-distributed recompute instead, which always reseeds these aux tables from
-the log. Every replay returns ``TableDelta``/``GroupDelta`` per table, the
+distributed path instead, which always rewrites these aux tables from the
+log. Every replay returns ``TableDelta``/``GroupDelta`` per table, the
 same delta map the distributed path produces.
 
 Faithfulness notes (mirroring projections/core.py, NOT events/oracle.py's

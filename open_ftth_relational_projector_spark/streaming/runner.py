@@ -4,26 +4,30 @@ The reference's Worker (Worker.cs:22-48) replays all history with writes
 suppressed, snapshots every table (truncate + COPY), then polls every
 2000 ms applying per-event DML. Spark-first:
 
-* ``dehydrate`` — batch job: run all 8 projections over the full log, bulk
-  overwrite the sink, persist the slack-end pre-aggregation, record the
+* ``dehydrate`` — batch job: persist the full log, bulk-load a frame for
+  every sink table (projections.core.sink_frames: the 8 projections, the
+  slack-end pre-aggregation and the aux seeds), release the log, record the
   watermark (T2 bootstrap).
-* ``apply_batch`` — one micro-batch of incremental maintenance, on one of
-  two paths chosen once, before any work, from the bounded size probe and
-  the batch's min seq against the watermark:
+* ``apply_batch`` — one micro-batch, on one of three forms chosen once,
+  before any work, from the bounded size probe and the batch's min seq
+  against the watermark:
 
-  - driver path (driver-sized, no overlap — every steady-state poll):
-    parse the probed rows, replay them over sink-seeded state
+  - driver path (driver-sized, min seq > watermark — every steady-state
+    poll): parse the probed rows, replay them over sink-seeded state
     (streaming/replay.py), fold the spec registries and append the edge
     deltas. It never builds, persists or scans the accumulated log.
-  - distributed path (oversized, or min seq ≤ watermark): the only place
-    the accumulated log is built and persisted; affected-key recompute
-    (streaming/incremental.compute_deltas) over it, and the aux tables are
-    always reseeded from it. Recompute-from-log is idempotent by
-    construction, so a re-delivered or overlapping batch lands here.
+  - rewrite (min seq ≤ watermark: a re-delivered batch, or one the file
+    source handed over after a later-seq batch): both incremental forms
+    assume the sink holds the fold of every earlier event, which no longer
+    holds, so every sink table is rewritten from the accumulated log with
+    the frames dehydrate loads.
+  - affected-key recompute (oversized, in order):
+    streaming/incremental.compute_deltas over the accumulated log, and the
+    aux tables reseeded from it.
 
-  Both paths produce the same ``TableDelta``/``GroupDelta`` map and write
-  it with keyed MERGE/DELETE inside one sink transaction keyed by batch_id
-  (T5: re-delivered batch ids are skipped).
+  The last two are the distributed path, the only place the accumulated
+  log is built and persisted. Every form writes inside one sink
+  transaction keyed by batch_id (T5: re-delivered batch ids are skipped).
 * ``ProjectionStream`` — Structured Streaming wiring: file-source
   ``readStream`` over an envelope directory, ``foreachBatch`` into
   ``apply_batch``, default trigger processingTime=2s matching the
@@ -31,7 +35,7 @@ suppressed, snapshots every table (truncate + COPY), then polls every
   runs. Bronze accumulation is deduped on ``seq`` so a crash between bronze
   append and sink commit re-applies cleanly.
 
-Batch-order independence: both paths yield fold(applied events) for the
+Batch-order independence: every form yields fold(applied events) for the
 touched keys, so the final sink state depends only on the set of applied
 events, not the batch boundaries — the equivalence tests exploit this by
 splitting one log at random points.
@@ -41,14 +45,19 @@ from __future__ import annotations
 
 import os
 from collections import Counter
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from open_ftth_relational_projector_spark.events.reader import EventLog
 from open_ftth_relational_projector_spark.events.schemas import ENVELOPE_SCHEMA
-from open_ftth_relational_projector_spark.projections import project_all
-from open_ftth_relational_projector_spark.projections.core import slack_ends
+from open_ftth_relational_projector_spark.plans import concurrency
+from open_ftth_relational_projector_spark.projections.core import (
+    aux_seed_frames,
+    sink_frames,
+)
+from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
+from open_ftth_relational_projector_spark.sinks.duckdb_sink import _to_arrow
 from open_ftth_relational_projector_spark.streaming.replay import fold_spec_registry
 from open_ftth_relational_projector_spark.streaming.incremental import (
     GroupDelta,
@@ -62,141 +71,35 @@ from open_ftth_relational_projector_spark.streaming.incremental import (
 )
 
 
-def aux_seed_frames(
-    log: EventLog, state: DataFrame | None = None, edges: DataFrame | None = None
-) -> dict[str, DataFrame]:
-    """Aux-table seed frames from an accumulated log: the append-only edge
-    sets plus the silver span state and spec registries the driver-side
-    micro-batch replay reads. Used at dehydration and when a too-large
-    batch takes the distributed fallback (which must leave the aux tables
-    consistent for the next driver-side batch)."""
-    from open_ftth_relational_projector_spark.operators.lww import latest_by_key
-    from open_ftth_relational_projector_spark.projections.core import (
-        _parent_edges,
-        _parent_registry_versions,
-        _span_state,
+def _load(sink, frames: dict[str, DataFrame], txn=nullcontext()) -> None:
+    """Overwrite each frame's sink table. The Spark side (plans → Arrow)
+    fans out concurrently — the tables are independent jobs over the log's
+    shared cached substreams — and runs before ``txn`` opens; only the
+    single-connection DuckDB writes stay serial. On a cluster the write
+    step is per-table Spark JDBC writes and the whole loop is concurrent."""
+    arrow = concurrency.run_concurrent(
+        {
+            name: lambda d=df, c=[col for col, _ in TABLE_COLUMNS[name]]: _to_arrow(d, c)
+            for name, df in frames.items()
+        }
     )
-    from open_ftth_relational_projector_spark.streaming.replay import STATE_COLS
-
-    if state is None:
-        state = _span_state(log)
-    if edges is None:
-        edges = _parent_edges(log)
-    span_spec = latest_by_key(
-        log.of("SpanEquipmentSpecificationAdded").select(
-            F.col("specification.id").alias("spec_id"),
-            "seq",
-            F.col("specification.name").alias("name"),
-            F.col("specification.rootTemplate.spanStructureSpecificationId").alias(
-                "struct_spec_id"
-            ),
-            F.col("specification.isCable").alias("is_cable"),
-        ),
-        "spec_id",
-    ).select("spec_id", "name", "struct_spec_id", "is_cable")
-    struct_spec = latest_by_key(
-        log.of("SpanStructureSpecificationAdded").select(
-            F.col("specification.id").alias("struct_spec_id"),
-            "seq",
-            F.col("specification.outerDiameter").alias("outer_diameter"),
-        ),
-        "struct_spec_id",
-    ).select("struct_spec_id", "outer_diameter")
-    from open_ftth_relational_projector_spark.projections.core import _walk_versions
-
-    nc_spec = latest_by_key(
-        log.of("NodeContainerSpecificationAdded").select(
-            F.col("specification.id").alias("spec_id"),
-            "seq",
-            F.col("specification.name").alias("name"),
-            F.col("specification.category").alias("category"),
-        ),
-        "spec_id",
-    ).select("spec_id", "name", "category")
-    term_spec = latest_by_key(
-        log.of("TerminalEquipmentSpecificationAdded").select(
-            F.col("specification.id").alias("spec_id"),
-            "seq",
-            F.col("specification.isCustomerTermination").alias(
-                "is_customer_termination"
-            ),
-        ),
-        "spec_id",
-    ).select("spec_id", "is_customer_termination")
-    walk = latest_by_key(_walk_versions(log), "interest_id").select(
-        "interest_id", "seq", "walk"
-    )
-    cable_placement = latest_by_key(
-        log.of("SpanEquipmentPlacedInRouteNetwork").select(
-            F.col("equipment.id").alias("cable_id"),
-            "seq",
-            F.col("equipment.walkOfInterestId").alias("interest_id"),
-        ),
-        "cable_id",
-    ).select("cable_id", "seq", "interest_id")
-    return {
-        "_aux_affix_edge": edges.select("child_id", "seq", "parent_id"),
-        "_aux_root_segment": _parent_registry_versions(log),
-        "_aux_detach": log.of("SpanEquipmentDetachedFromParent").select(
-            F.col("spanEquipmentId").alias("child_id"), "seq"
-        ),
-        "_aux_span_state": state.select(*STATE_COLS),
-        "_aux_span_spec": span_spec,
-        "_aux_struct_spec": struct_spec,
-        "_aux_nc_spec": nc_spec,
-        "_aux_term_spec": term_spec,
-        "_aux_walk": walk,
-        "_aux_cable_placement": cable_placement,
-    }
+    with txn:
+        for name in frames:
+            sink.overwrite(name, arrow[name])
 
 
 def dehydrate(envelopes: DataFrame, sink) -> int:
-    """Full replay → bulk snapshot (T2 phase 1). Returns the watermark seq.
-
-    The Spark side (projection plans → Arrow) fans out concurrently — the
-    tables are independent jobs over shared cached substreams; only the
-    single-connection DuckDB inserts stay serial. On a cluster the insert
-    step is per-table Spark JDBC writes and the whole loop is concurrent.
-    """
-    from open_ftth_relational_projector_spark.projections.core import (
-        _has_child_final,
-        _parent_edges,
-        _span_state,
-    )
-    from open_ftth_relational_projector_spark.plans.concurrency import run_concurrent
-    from open_ftth_relational_projector_spark.sinks.duckdb_sink import _to_arrow
-    from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
-
+    """Full replay → bulk snapshot of every sink table (T2 phase 1).
+    Returns the watermark seq."""
     sink.ensure_schema()
     log = EventLog.from_envelopes(envelopes).persisted()
-    state = _span_state(log).persist()
-    state.count()  # prime the shared fold once, before the fan-out
-    # one edge fold feeds conduit_slack, the slack-end aux set, AND the aux
-    # seed tables the incremental path maintains from then on
-    edges = _parent_edges(log).persist()
-    has_child = _has_child_final(log, edges=edges)
-    tables = project_all(log, persist=False, state=state, has_child=has_child)
-    tables["_aux_slack_end"] = slack_ends(log, state=state, has_child=has_child)
-    tables.update(aux_seed_frames(log, state=state, edges=edges))
-    arrow = run_concurrent(
-        {
-            name: (
-                lambda d=df, c=[col for col, _ in TABLE_COLUMNS[name]]: _to_arrow(d, c)
-            )
-            for name, df in tables.items()
-        }
-    )
-    for name in tables:
-        sink.overwrite(name, arrow[name])
-    row = envelopes.agg(F.max("seq")).collect()[0]
+    try:
+        _load(sink, sink_frames(log))
+        row = envelopes.agg(F.max("seq")).collect()[0]
+    finally:
+        log.unpersist()
     watermark = int(row[0]) if row[0] is not None else 0
     sink.set_meta("watermark", str(watermark))
-    # every consumer of the cached log/state/edges has materialized above
-    # — release the blocks (r13, guide §5: unpersist when done; these
-    # previously lived for the rest of the session)
-    state.unpersist(False)
-    edges.unpersist(False)
-    log.unpersist()
     return watermark
 
 
@@ -306,17 +209,18 @@ def apply_batch(
         seqs = [s for s, _, _ in parsed]
         batch_min, batch_max = min(seqs, default=None), max(seqs, default=None)
     else:
-        parsed = None
         stat = batch_envelopes.agg(F.min("seq"), F.max("seq")).collect()[0]
         batch_min, batch_max = int(stat[0]), int(stat[1])
     watermark = int(sink.get_meta("watermark") or 0)
     txn = _batch_transaction(sink, batch_id, batch_max, watermark)
-    # The driver-side replays require sink state == fold(log ∖ batch); a
-    # re-delivered/overlapping batch (min seq ≤ watermark) violates that.
-    if driver_sized and (batch_min is None or batch_min > watermark):
+    # Both incremental forms require sink state == fold(log ∖ batch); a
+    # re-delivered batch, or one landing after a later-seq batch (min seq ≤
+    # watermark), violates that.
+    overlaps = batch_min is not None and batch_min <= watermark
+    if driver_sized and not overlaps:
         _apply_on_driver(parsed, sink, txn)
     else:
-        _apply_distributed(full_envelopes, batch_envelopes, parsed, sink, txn)
+        _apply_distributed(full_envelopes, batch_envelopes, overlaps, sink, txn)
     return True
 
 
@@ -372,20 +276,20 @@ def _apply_on_driver(parsed: list[tuple[int, str, dict]], sink, txn) -> None:
 
 
 def _apply_distributed(
-    full_envelopes: DataFrame, batch_envelopes: DataFrame, parsed, sink, txn
+    full_envelopes: DataFrame, batch_envelopes: DataFrame, overlaps: bool, sink, txn
 ) -> None:
     """Distributed path: the only place the accumulated log is built and
-    persisted. ``parsed`` is None for an oversized batch, whose touched
-    keys then come from a distributed distinct aggregation (only the id
-    LISTS reach the driver)."""
+    persisted. A batch overlapping the watermark rewrites every sink table
+    from it (the same frames dehydrate loads). An oversized in-order batch
+    recomputes its touched keys, which come from a distributed distinct
+    aggregation (only the id LISTS reach the driver), and reseeds the aux
+    tables."""
     full_log = EventLog.from_envelopes(full_envelopes).persisted()
-    batch_log = None
     try:
-        if parsed is not None:
-            ids = affected_ids_from_rows(parsed)
-        else:
-            batch_log = EventLog.from_envelopes(batch_envelopes).persisted()
-            ids = affected_ids_distributed(batch_log)
+        if overlaps:
+            _load(sink, sink_frames(full_log), txn)
+            return
+        ids = affected_ids_distributed(EventLog.from_envelopes(batch_envelopes))
         deltas = compute_deltas(full_log, ids)
         with txn:
             # the aux sets — including the spec/walk registries an
@@ -396,8 +300,6 @@ def _apply_distributed(
             _write_deltas(sink, deltas)
     finally:
         full_log.unpersist()
-        if batch_log is not None:
-            batch_log.unpersist()
 
 
 class ProjectionStream:

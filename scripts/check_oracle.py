@@ -85,42 +85,46 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
     osql = entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():
-        release_tracked_persists(spark)  # query-scoped catalog caches (r13)
+        # query-scoped catalog caches: released once this query is checked,
+        # including the last one
         try:
-            sdf = fn(spark, sf_dir)
-            s_rows = rows_of_spark(sdf)
-            s_cols = sorted(sdf.columns)
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
-            continue
-        if name not in osql:
-            print(f"rows  {name}: {len(s_rows)} (no SQL oracle — rows-only)")
-            continue
-        try:
-            d_rows, d_cols = rows_of_duck(con.sql(osql[name]))
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error {e}")
-            continue
-        if s_cols != d_cols:
-            failures.append(name)
-            print(f"FAIL  {name}: columns {s_cols} vs {d_cols}")
-            continue
-        if len(s_rows) != len(d_rows):
-            failures.append(name)
-            print(f"FAIL  {name}: rowcount {len(s_rows)} vs {len(d_rows)}")
-            continue
-        if s_rows != d_rows:
-            failures.append(name)
-            diff = next(
-                (i, a, b) for i, (a, b) in enumerate(zip(s_rows, d_rows)) if a != b
-            )
-            print(f"FAIL  {name}: values differ at sorted idx {diff[0]}:")
-            print(f"      spark : {diff[1]}")
-            print(f"      duckdb: {diff[2]}")
-            continue
-        print(f"OK    {name}: {len(s_rows)} rows")
+            try:
+                sdf = fn(spark, sf_dir)
+                s_rows = rows_of_spark(sdf)
+                s_cols = sorted(sdf.columns)
+            except Exception as e:  # noqa: BLE001
+                failures.append(name)
+                print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
+                continue
+            if name not in osql:
+                print(f"rows  {name}: {len(s_rows)} (no SQL oracle — rows-only)")
+                continue
+            try:
+                d_rows, d_cols = rows_of_duck(con.sql(osql[name]))
+            except Exception as e:  # noqa: BLE001
+                failures.append(name)
+                print(f"FAIL  {name}: duckdb error {e}")
+                continue
+            if s_cols != d_cols:
+                failures.append(name)
+                print(f"FAIL  {name}: columns {s_cols} vs {d_cols}")
+                continue
+            if len(s_rows) != len(d_rows):
+                failures.append(name)
+                print(f"FAIL  {name}: rowcount {len(s_rows)} vs {len(d_rows)}")
+                continue
+            if s_rows != d_rows:
+                failures.append(name)
+                diff = next(
+                    (i, a, b) for i, (a, b) in enumerate(zip(s_rows, d_rows)) if a != b
+                )
+                print(f"FAIL  {name}: values differ at sorted idx {diff[0]}:")
+                print(f"      spark : {diff[1]}")
+                print(f"      duckdb: {diff[2]}")
+                continue
+            print(f"OK    {name}: {len(s_rows)} rows")
+        finally:
+            release_tracked_persists(spark)
     print(f"\n{len(qs) - len(failures)}/{len(qs)} queries OK")
     spark.stop()
     return 1 if failures else 0

@@ -27,8 +27,8 @@ def test_bronze_roundtrip_preserves_projections(spark):
     tmp = tempfile.mkdtemp(prefix="ofrp_bronze_")
     try:
         write_typed_bronze(env, tmp, repartition_by_entity=4)
-        direct = project_all(EventLog.from_envelopes(env), persist=False)
-        via_bronze = project_all(read_typed_bronze(spark, tmp), persist=False)
+        direct = project_all(EventLog.from_envelopes(env))
+        via_bronze = project_all(read_typed_bronze(spark, tmp))
         for name in direct:
             assert rows_set(direct[name]) == rows_set(via_bronze[name]), name
     finally:

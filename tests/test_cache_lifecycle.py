@@ -2,6 +2,7 @@
 between queries by long-lived callers, so a re-run can never read a cache
 a previous run left behind (the bench honest-cold retry contract)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from open_ftth_relational_projector_spark.cache import (
@@ -76,3 +77,68 @@ def test_event_log_release_leaves_registry_unchanged(spark, monkeypatch):
         )
     assert registered() == before
     env.unpersist(False)
+
+
+def test_tracked_persist_registry_is_thread_safe(spark, monkeypatch):
+    """8 threads register at once on a session with no registry yet: the
+    first-touch creation race must lose no frame, and one release must
+    unpersist all 8."""
+    import sys
+    import threading
+
+    from open_ftth_relational_projector_spark.cache import _REG_ATTR
+
+    release_tracked_persists(spark)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(20):
+            monkeypatch.delattr(spark, _REG_ATTR, raising=False)
+            frames = [spark.range(i + 1) for i in range(8)]
+            gate = threading.Barrier(len(frames))
+
+            def register(df):
+                gate.wait(timeout=60)
+                tracked_persist(df)
+
+            threads = [threading.Thread(target=register, args=(df,)) for df in frames]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in threads)
+            registry = getattr(spark, _REG_ATTR)
+            assert sorted(map(id, registry)) == sorted(map(id, frames))
+            assert release_tracked_persists(spark) == len(frames)
+            assert not any(df.storageLevel.useMemory for df in frames)
+    finally:
+        sys.setswitchinterval(switch)
+
+
+def test_curation_worker_pool_winds_down_after_main_thread_raise(spark, monkeypatch):
+    """A raise in curation_decisions' main-thread branch, while the
+    semantic-dedup branch builds in its worker thread, leaves no worker
+    thread and no running Spark job behind — even while the exception's
+    traceback (which references the pool) is still held."""
+    import threading
+
+    from open_ftth_relational_projector_spark.catalog import SPARK_QUERIES
+    from open_ftth_relational_projector_spark.functions import sampling
+
+    def injected(*args, **kwargs):
+        raise RuntimeError("injected main-thread failure")
+
+    monkeypatch.setattr(sampling, "dsir_importance_weights", injected)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected") as excinfo:
+        SPARK_QUERIES["curation_decisions"](spark, "/root/testdata/sf0.001")
+    workers = [
+        t for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    for t in workers:
+        t.join(timeout=60)
+    assert not [t.name for t in workers if t.is_alive()]
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert excinfo.traceback  # the pool stays referenced until here
+    release_tracked_persists(spark)

@@ -116,7 +116,7 @@ def test_projection_no_cartesian(spark):
     raw = spark.createDataFrame(
         to_envelope_rows(generate(seed=3, scale=2)), ENVELOPE_SCHEMA
     )
-    for name, df in project_all(EventLog.from_envelopes(raw), persist=False).items():
+    for name, df in project_all(EventLog.from_envelopes(raw)).items():
         C.assert_no_cartesian(df)
 
 

@@ -673,3 +673,54 @@ def test_apply_batch_probe_seq_first_skips_payload_pull(spark, monkeypatch):
     )
     assert len(payload_pulls) == 1
     _assert_sink_matches(sink2, expected)
+
+
+def test_batch_after_later_seq_batch_rewrites_from_full_log(spark):
+    """The file source orders landed files by modification time, and two
+    files can tie: batch {4} (a placement) then lands before batch {3}
+    (the spec it uses). {4} replays against a sink that lacks the spec;
+    {3}'s min seq is at or below the watermark, so it must rewrite the
+    sink from the full log, which restores spec_name, outer_diameter and
+    the placement's two slack ends."""
+    import json
+
+    from open_ftth_relational_projector_spark.operators.arrays import EMPTY_GUID
+
+    events = [
+        (1, "SpanStructureSpecificationAdded",
+         {"specification": {"id": "ss", "outerDiameter": 12}}),
+        (2, "WalkOfInterestRegistered",
+         {"interest": {"id": "int-x", "routeNetworkElementRefs": ["n1", "n2"]}}),
+        (3, "SpanEquipmentSpecificationAdded",
+         {"specification": {"id": "S", "name": "Ø12 conduit", "isCable": False,
+                            "rootTemplate": {"spanStructureSpecificationId": "ss"}}}),
+        (4, "SpanEquipmentPlacedInRouteNetwork",
+         {"equipment": {"id": "X", "name": "x", "specificationId": "S",
+                        "walkOfInterestId": "int-x", "nodesOfInterestIds": ["n1", "n2"],
+                        "isCable": False,
+                        "spanStructures": [{"spanSegments": [{
+                            "id": "rs-x", "fromNodeOfInterestIndex": 0,
+                            "toNodeOfInterestIndex": 1,
+                            "fromTerminalId": EMPTY_GUID,
+                            "toTerminalId": EMPTY_GUID}]}],
+                        "utilityNetworkHops": None, "addressInfo": None}}),
+    ]
+    rows = [(s, t, json.dumps(p)) for s, t, p in events]
+    env = spark.createDataFrame(rows, ENVELOPE_SCHEMA).cache()
+
+    sink = DuckDBSink()
+    dehydrate(env.filter("seq <= 2"), sink)
+    apply_batch(env.filter("seq != 3"), env.filter("seq = 4"), sink, batch_id=0)
+    apply_batch(env, env.filter("seq = 3"), sink, batch_id=1)
+
+    got = sink.fetch_df(
+        'SELECT spec_name, outer_diameter FROM utility_network."span_equipment"'
+    )
+    assert list(got.itertuples(index=False, name=None)) == [("Ø12 conduit", 12)]
+    assert len(sink.read_table("conduit_slack")) == 2
+    assert sink.get_meta("watermark") == "4"
+    tables = project_all(EventLog.from_envelopes(env))
+    _assert_sink_matches(
+        sink, {n: tables[n].toPandas() for n in PROJECTION_TABLES}
+    )
+    env.unpersist()
