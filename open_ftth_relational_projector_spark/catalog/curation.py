@@ -9,7 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window as W  # noqa: F401
 
 from open_ftth_relational_projector_spark.sources.tables import load_table, scattered  # noqa: F401
-from open_ftth_relational_projector_spark.cache import tracked_persist  # noqa: F401
+from open_ftth_relational_projector_spark.cache import (  # noqa: F401
+    release_persist,
+    tracked_persist,
+)
 from open_ftth_relational_projector_spark.events.reader import EventLog  # noqa: F401
 from open_ftth_relational_projector_spark.operators import asof_join, latest_by_key  # noqa: F401
 from open_ftth_relational_projector_spark.functions import dedup as D  # noqa: F401
@@ -149,7 +152,27 @@ def curation_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each signal keeps its own verified plan (see its
     standalone catalog entry); the composition adds only doc-id-keyed
     joins of per-doc aggregates and two 1-row percentile aggregates
-    broadcast back — no new corpus-sized state, no new quadratic work."""
+    broadcast back — no new corpus-sized state, no new quadratic work.
+
+    Every frame it persists is tracked, and released by the caller loop
+    after the consuming action — or here, if construction raises and no
+    caller ever receives them."""
+    persisted: list[DataFrame] = []
+
+    def persist(df: DataFrame) -> DataFrame:
+        persisted.append(tracked_persist(df))
+        return df
+
+    try:
+        return _curation_plan(spark, sf_dir, persist)
+    except BaseException:
+        for df in persisted:
+            release_persist(df)
+        raise
+
+
+def _curation_plan(spark: SparkSession, sf_dir: str, persist) -> DataFrame:
+    """curation_decisions' body; ``persist`` is its tracked persist."""
     from open_ftth_relational_projector_spark.functions.clustering import (
         semantic_dedup,
     )
@@ -168,9 +191,8 @@ def curation_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # early — source/n_chars never feed a signal), which also keeps the
     # shared scattered()/load_table frame itself unpersisted (r12 advice:
     # persisting the session-shared memo frame covered every sibling
-    # query's documents scan for the rest of the session). Tracked:
-    # released by the caller loop after the consuming action.
-    docs = tracked_persist(
+    # query's documents scan for the rest of the session).
+    docs = persist(
         scattered(load_table(spark, sf_dir, "documents")).select(
             "doc_id", "text", "lang"
         )
@@ -207,10 +229,10 @@ def curation_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-doc dimension-sized (one row per document). Tracked (r13): the
         # caller loop releases them after the consuming action (previously
         # session-lifetime, relying on LRU eviction).
-        dw = tracked_persist(
+        dw = persist(
             dsir_importance_weights(docs, target_lang="en", n_buckets=256)
         )
-        lms = tracked_persist(bigram_lm_scores(docs))
+        lms = persist(bigram_lm_scores(docs))
         # corpus 20th-percentile thresholds via the hierarchical-rank exact
         # quantile: the dw/lms frames are per-doc (one row per document), so
         # the exact `percentile` aggregate would buffer the whole corpus's
@@ -230,7 +252,7 @@ def curation_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).unionByName(
             lms.select(F.lit("l").alias("sig"), F.col("avg_logprob").alias("v"))
         )
-        thr2 = tracked_persist(
+        thr2 = persist(
             exact_quantiles(both, "v", {"t": 0.2}, group_cols=["sig"])
         )
         dthr = thr2.filter(F.col("sig") == "d").select(F.col("t").alias("dt"))

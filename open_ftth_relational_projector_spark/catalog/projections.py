@@ -207,6 +207,8 @@ def stream_incremental_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     as proj_work_task_sim — the batch/streaming duality (SURVEY §2.7 T2/T5)
     under the driver's correctness gate.
     """
+    import tempfile
+
     from open_ftth_relational_projector_spark.events.reader import (
         EventLog as _EL,
     )
@@ -252,7 +254,9 @@ def stream_incremental_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix = env.filter(F.col("seq") <= cut)
     sink.overwrite("work_task", _pwt(_EL.from_envelopes(prefix)))
     sink.set_meta("watermark", str(cut))
-    apply_batch(env, env.filter(F.col("seq") > cut), sink, batch_id=0)
+    with tempfile.TemporaryDirectory(prefix="ofrp_bronze_") as bronze:
+        prefix.write.mode("overwrite").parquet(bronze)
+        apply_batch(bronze, env.filter(F.col("seq") > cut), sink, batch_id=0)
 
     out = sink.read_table("work_task")
     return spark.createDataFrame(out, "id string, number string, status string")

@@ -423,7 +423,12 @@ def minhash_near_dups(
     With ``hash_fn=portable_hash64, portable_bands=True`` the whole
     pipeline — signatures, banding, candidate join, verification — is
     reproducible in ANSI SQL, which is how the driver hash-matches it
-    (catalog ``minhash_near_dups_md5``)."""
+    (catalog ``minhash_near_dups_md5``).
+
+    The corpus-sized shingle frame is persisted through
+    ``cache.tracked_persist`` and stays cached after this returns: a
+    library caller releases it with ``cache.release_tracked_persists``
+    once the action consuming the result has run."""
     from open_ftth_relational_projector_spark.cache import tracked_persist
 
     # ONE shingle pass (r13, guide §1.2/§5): the banding side and BOTH

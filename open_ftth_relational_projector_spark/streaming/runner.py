@@ -8,9 +8,13 @@ suppressed, snapshots every table (truncate + COPY), then polls every
   every sink table (projections.core.sink_frames: the 8 projections, the
   slack-end pre-aggregation and the aux seeds), release the log, record the
   watermark (T2 bootstrap).
-* ``apply_batch`` — one micro-batch, on one of three forms chosen once,
-  before any work, from the bounded size probe and the batch's min seq
-  against the watermark:
+* ``apply_batch`` — one micro-batch, appended to bronze and then applied
+  to the sink in one of three forms chosen once, before any work, from the
+  bounded size probe and the batch's min seq against the watermark. The
+  probe runs over the raw batch and answers "is it empty?" too; duplicate
+  seqs are dropped on the driver. A driver-sized batch is appended to
+  bronze from the probed rows as one parquet file, so an in-order
+  steady-state batch costs exactly one Spark job: the probe.
 
   - driver path (driver-sized, min seq > watermark — every steady-state
     poll): parse the probed rows, replay them over sink-seeded state
@@ -21,19 +25,20 @@ suppressed, snapshots every table (truncate + COPY), then polls every
     assume the sink holds the fold of every earlier event, which no longer
     holds, so every sink table is rewritten from the accumulated log with
     the frames dehydrate loads.
-  - affected-key recompute (oversized, in order):
-    streaming/incremental.compute_deltas over the accumulated log, and the
-    aux tables reseeded from it.
+  - affected-key recompute (oversized, in order; the batch reaches bronze
+    through a Spark append): streaming/incremental.compute_deltas over the
+    accumulated log, and the aux tables reseeded from it.
 
   The last two are the distributed path, the only place the accumulated
-  log is built and persisted. Every form writes inside one sink
-  transaction keyed by batch_id (T5: re-delivered batch ids are skipped).
+  log is read from bronze, built and persisted. Every form writes inside
+  one sink transaction keyed by batch_id (T5: re-delivered batch ids are
+  skipped).
 * ``ProjectionStream`` — Structured Streaming wiring: file-source
   ``readStream`` over an envelope directory, ``foreachBatch`` into
   ``apply_batch``, default trigger processingTime=2s matching the
   reference's poll loop (Worker.cs:47), ``availableNow`` for drain-and-stop
-  runs. Bronze accumulation is deduped on ``seq`` so a crash between bronze
-  append and sink commit re-applies cleanly.
+  runs. Bronze is appended before the sink commit and deduped on ``seq``
+  when read, so a crash between the two re-applies cleanly.
 
 Batch-order independence: every form yields fold(applied events) for the
 touched keys, so the final sink state depends only on the set of applied
@@ -44,6 +49,7 @@ splitting one log at random points.
 from __future__ import annotations
 
 import os
+import uuid
 from collections import Counter
 from contextlib import contextmanager, nullcontext
 
@@ -165,18 +171,60 @@ def _probe_collect(batch_envelopes: DataFrame, cap: int) -> list:
     )
 
 
+def _probe_batch(batch_envelopes: DataFrame, cap: int, seq_first: bool):
+    """The batch's rows, deduplicated on seq and in seq order, or None when
+    it holds more than ``cap`` rows. The probe runs over the raw batch, so
+    a driver-sized batch costs one Spark job (two under ``seq_first``); a
+    re-delivered seq counts towards the cap but is dropped here."""
+    if seq_first:
+        seqs = batch_envelopes.select("seq").limit(cap + 1).collect()
+        if len(seqs) > cap:
+            return None
+        rows = _probe_collect(batch_envelopes, cap) if seqs else []
+    else:
+        rows = _probe_collect(batch_envelopes, cap)
+        if len(rows) > cap:
+            return None
+    return sorted({r.seq: r for r in rows}.values(), key=lambda r: r.seq)
+
+
+def _append_bronze(bronze_dir: str, rows: list) -> None:
+    """Append probed rows to bronze as one parquet file, written under a
+    dot-prefixed name (which Spark's file listing skips) and renamed into
+    place, so a reader never sees a half-written file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(bronze_dir, exist_ok=True)
+    table = pa.table(
+        {
+            "seq": pa.array([r.seq for r in rows], pa.int64()),
+            "event_type": pa.array([r.event_type for r in rows], pa.string()),
+            "payload": pa.array([r.payload for r in rows], pa.string()),
+        }
+    )
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(bronze_dir, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(bronze_dir, name))
+
+
 def apply_batch(
-    full_envelopes: DataFrame,
+    bronze_dir: str,
     batch_envelopes: DataFrame,
     sink,
     batch_id: int | None = None,
     probe_seq_first: bool = False,
 ) -> bool:
-    """Apply one micro-batch incrementally. Returns False if skipped
-    (already-applied batch_id — T5 exactly-once).
+    """Append one micro-batch to bronze and apply it to the sink. Returns
+    False if nothing was applied: an already-applied batch_id (T5
+    exactly-once) or an empty batch.
 
-    ``full_envelopes`` (the accumulated log, batch included) is read only
-    on the distributed path; a driver-path batch never touches it.
+    ``bronze_dir`` holds the accumulated log, deduplicated on seq when
+    read. The batch is appended there before the sink transaction, so a
+    crash between the two re-applies cleanly. A driver-sized batch is
+    appended from its probed rows without a Spark job; only the
+    distributed path reads the accumulated log back.
 
     ``probe_seq_first=True`` sizes the batch with a seq-ONLY probe before
     touching payloads, so an oversized batch never materializes cap+1 raw
@@ -192,35 +240,32 @@ def apply_batch(
         parse_envelope_rows,
     )
 
-    # Size-gate with a PROBE collect of cap+1 rows: a driver-sized batch
-    # (every 2 s-trigger micro-batch) costs ONE Spark job — the probe IS
-    # the collected batch and min/max seq derive driver-side. Only an
-    # oversized batch pays a second job for min/max; payloads parse only
-    # once the batch is known to be driver-sized.
-    if probe_seq_first:
-        seq_rows = batch_envelopes.select("seq").limit(cap + 1).collect()
-        driver_sized = len(seq_rows) <= cap
-        probe_rows = _probe_collect(batch_envelopes, cap) if driver_sized else []
-    else:
-        probe_rows = _probe_collect(batch_envelopes, cap)
-        driver_sized = len(probe_rows) <= cap
-    if driver_sized:
-        parsed = parse_envelope_rows(probe_rows)
-        seqs = [s for s, _, _ in parsed]
-        batch_min, batch_max = min(seqs, default=None), max(seqs, default=None)
-    else:
+    # A driver-sized batch (every 2 s-trigger micro-batch) costs ONE Spark
+    # job: the probe IS the collected batch, min/max seq derive from it and
+    # bronze is written from it. Only an oversized batch pays Spark jobs
+    # for min/max and the bronze append; payloads parse only once the
+    # batch is known to be driver-sized.
+    rows = _probe_batch(batch_envelopes, cap, probe_seq_first)
+    if rows is None:
         stat = batch_envelopes.agg(F.min("seq"), F.max("seq")).collect()[0]
         batch_min, batch_max = int(stat[0]), int(stat[1])
+        batch_envelopes.write.mode("append").parquet(bronze_dir)
+    elif not rows:
+        return False
+    else:
+        parsed = parse_envelope_rows(rows)
+        batch_min, batch_max = parsed[0][0], parsed[-1][0]
+        _append_bronze(bronze_dir, rows)
     watermark = int(sink.get_meta("watermark") or 0)
     txn = _batch_transaction(sink, batch_id, batch_max, watermark)
     # Both incremental forms require sink state == fold(log ∖ batch); a
     # re-delivered batch, or one landing after a later-seq batch (min seq ≤
     # watermark), violates that.
-    overlaps = batch_min is not None and batch_min <= watermark
-    if driver_sized and not overlaps:
+    overlaps = batch_min <= watermark
+    if rows is not None and not overlaps:
         _apply_on_driver(parsed, sink, txn)
     else:
-        _apply_distributed(full_envelopes, batch_envelopes, overlaps, sink, txn)
+        _apply_distributed(bronze_dir, batch_envelopes, overlaps, sink, txn)
     return True
 
 
@@ -276,14 +321,21 @@ def _apply_on_driver(parsed: list[tuple[int, str, dict]], sink, txn) -> None:
 
 
 def _apply_distributed(
-    full_envelopes: DataFrame, batch_envelopes: DataFrame, overlaps: bool, sink, txn
+    bronze_dir: str, batch_envelopes: DataFrame, overlaps: bool, sink, txn
 ) -> None:
-    """Distributed path: the only place the accumulated log is built and
-    persisted. A batch overlapping the watermark rewrites every sink table
-    from it (the same frames dehydrate loads). An oversized in-order batch
-    recomputes its touched keys, which come from a distributed distinct
-    aggregation (only the id LISTS reach the driver), and reseeds the aux
-    tables."""
+    """Distributed path: the only place the accumulated log is read from
+    bronze, built and persisted. A batch overlapping the watermark rewrites
+    every sink table from it (the same frames dehydrate loads). An
+    oversized in-order batch recomputes its touched keys, which come from a
+    distributed distinct aggregation over the raw batch (only the id LISTS
+    reach the driver), and reseeds the aux tables."""
+    # the explicit schema skips a footer-inference job; the seq dedup
+    # absorbs a batch appended twice around a crash
+    full_envelopes = (
+        batch_envelopes.sparkSession.read.schema(ENVELOPE_SCHEMA)
+        .parquet(bronze_dir)
+        .dropDuplicates(["seq"])
+    )
     full_log = EventLog.from_envelopes(full_envelopes).persisted()
     try:
         if overlaps:
@@ -341,21 +393,11 @@ class ProjectionStream:
         self._first_since_start = True
 
     def _process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df.write.mode("append").parquet(self.bronze_dir)
-        # seq-dedup guards the crash window between append and sink commit;
-        # the explicit schema skips a footer-inference job on every batch
-        # (apply_batch reads this frame only on its distributed path)
-        full = (
-            self.spark.read.schema(ENVELOPE_SCHEMA)
-            .parquet(self.bronze_dir)
-            .dropDuplicates(["seq"])
-        )
-        batch = batch_df.dropDuplicates(["seq"])
+        # apply_batch probes the raw batch (an empty one is a no-op),
+        # appends it to bronze and then commits it to the sink
         apply_batch(
-            full,
-            batch,
+            self.bronze_dir,
+            batch_df,
             self.sink,
             batch_id=batch_id,
             probe_seq_first=self._first_since_start,

@@ -54,9 +54,12 @@ ALLOWLIST: dict[str, str] = {
     "plans/checks.py::wholestage_codegen_spans": "test helper: forces AQE final plan",
     "streaming/runner.py::dehydrate": "scalar max(seq)",
     "streaming/runner.py::apply_batch": (
-        "scalar min/max(seq) aggregate, plus the backlog-path seq-only "
-        "size probe bounded at cap+1 LONG values by the limit() in the "
-        "same expression (probe_seq_first callers)"
+        "scalar min/max(seq) aggregate, run only for an oversized batch "
+        "(a driver-sized one derives both from its probed rows)"
+    ),
+    "streaming/runner.py::_probe_batch": (
+        "backlog-path seq-only size probe bounded at cap+1 LONG values by "
+        "the limit() in the same expression (probe_seq_first callers)"
     ),
     "functions/boosting.py::adaboost_fit": (
         "bounded: one value from the checkpointed ONE-ROW stump frame "

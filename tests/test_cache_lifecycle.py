@@ -39,7 +39,7 @@ def test_catalog_query_persists_are_query_scoped(spark):
     assert release_tracked_persists(spark) >= 1
 
 
-def test_event_log_release_leaves_registry_unchanged(spark, monkeypatch):
+def test_event_log_release_leaves_registry_unchanged(spark, monkeypatch, tmp_path):
     """An EventLog unpersists through the cache registry: dehydrate plus
     three forced-fallback batches (each persists the accumulated and the
     batch log) leave the registry as long as they found it."""
@@ -68,9 +68,11 @@ def test_event_log_release_leaves_registry_unchanged(spark, monkeypatch):
     before = registered()
     sink = DuckDBSink()
     dehydrate(env.filter(f"seq <= {bounds[0]}"), sink)
+    bronze = str(tmp_path / "bronze")
+    env.filter(f"seq <= {bounds[0]}").write.parquet(bronze)
     for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
         apply_batch(
-            env.filter(f"seq <= {hi}"),
+            bronze,
             env.filter(f"seq > {lo} AND seq <= {hi}"),
             sink,
             batch_id=i,
@@ -118,10 +120,12 @@ def test_tracked_persist_registry_is_thread_safe(spark, monkeypatch):
 def test_curation_worker_pool_winds_down_after_main_thread_raise(spark, monkeypatch):
     """A raise in curation_decisions' main-thread branch, while the
     semantic-dedup branch builds in its worker thread, leaves no worker
-    thread and no running Spark job behind — even while the exception's
-    traceback (which references the pool) is still held."""
+    thread, no running Spark job and no registered persist behind — even
+    while the exception's traceback (which references the pool) is still
+    held."""
     import threading
 
+    from open_ftth_relational_projector_spark.cache import _REG_ATTR
     from open_ftth_relational_projector_spark.catalog import SPARK_QUERIES
     from open_ftth_relational_projector_spark.functions import sampling
 
@@ -129,6 +133,7 @@ def test_curation_worker_pool_winds_down_after_main_thread_raise(spark, monkeypa
         raise RuntimeError("injected main-thread failure")
 
     monkeypatch.setattr(sampling, "dsir_importance_weights", injected)
+    registered = len(getattr(spark, _REG_ATTR, None) or [])
     before = set(threading.enumerate())
     with pytest.raises(RuntimeError, match="injected") as excinfo:
         SPARK_QUERIES["curation_decisions"](spark, "/root/testdata/sf0.001")
@@ -140,5 +145,6 @@ def test_curation_worker_pool_winds_down_after_main_thread_raise(spark, monkeypa
         t.join(timeout=60)
     assert not [t.name for t in workers if t.is_alive()]
     assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert len(getattr(spark, _REG_ATTR, None) or []) == registered
     assert excinfo.traceback  # the pool stays referenced until here
     release_tracked_persists(spark)

@@ -9,9 +9,11 @@ its per-event DML.
 
 from __future__ import annotations
 
+import os
 import random
 import shutil
 import tempfile
+import time
 
 import pytest
 
@@ -62,35 +64,45 @@ def expected_tables(envelopes):
     return {n: tables[n].toPandas() for n in PROJECTION_TABLES}
 
 
-def _stream_split(spark, envelopes, bounds, sink):
-    dehydrate(envelopes.filter(f"seq <= {bounds[0]}"), sink)
+def _bronze(path, envelopes) -> str:
+    """A bronze directory holding ``envelopes``: the accumulated log that
+    apply_batch appends each batch to."""
+    envelopes.write.parquet(str(path))
+    return str(path)
+
+
+def _stream_split(spark, envelopes, bounds, sink, bronze_dir):
+    prefix = envelopes.filter(f"seq <= {bounds[0]}")
+    dehydrate(prefix, sink)
+    bronze = _bronze(bronze_dir, prefix)
     for i in range(len(bounds) - 1):
         lo, hi = bounds[i], bounds[i + 1]
         batch = envelopes.filter(f"seq > {lo} AND seq <= {hi}")
-        full = envelopes.filter(f"seq <= {hi}")
-        apply_batch(full, batch, sink, batch_id=i)
+        apply_batch(bronze, batch, sink, batch_id=i)
 
 
 @pytest.mark.parametrize("seed,n_cuts", [(42, 3), (7, 5), (1234, 2)])
 def test_streaming_equivalence_random_split(
-    spark, envelopes, expected_tables, seed, n_cuts
+    spark, envelopes, expected_tables, seed, n_cuts, tmp_path
 ):
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     rng = random.Random(seed)
     cuts = sorted(rng.sample(range(1, max_seq), n_cuts))
     bounds = [*cuts, max_seq]
     sink = DuckDBSink()
-    _stream_split(spark, envelopes, bounds, sink)
+    _stream_split(spark, envelopes, bounds, sink, tmp_path / "bronze")
     _assert_sink_matches(sink, expected_tables)
 
 
-def test_streaming_equivalence_per_event_tail(spark, envelopes, expected_tables):
+def test_streaming_equivalence_per_event_tail(
+    spark, envelopes, expected_tables, tmp_path
+):
     """Smallest batches: dehydrate all but the last 5 events, then apply
     them one at a time — the reference's steady-state shape."""
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     bounds = list(range(max_seq - 5, max_seq + 1))
     sink = DuckDBSink()
-    _stream_split(spark, envelopes, bounds, sink)
+    _stream_split(spark, envelopes, bounds, sink, tmp_path / "bronze")
     _assert_sink_matches(sink, expected_tables)
 
 
@@ -100,24 +112,25 @@ def test_dehydrate_only_equals_batch(spark, envelopes, expected_tables):
     _assert_sink_matches(sink, expected_tables)
 
 
-def test_batch_id_replay_skipped(spark, envelopes, expected_tables):
+def test_batch_id_replay_skipped(spark, envelopes, expected_tables, tmp_path):
     """T5: a re-delivered (batch_id, data) pair is a no-op, and a genuine
     re-application of the same data is idempotent."""
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     cut = max_seq // 2
     sink = DuckDBSink()
     dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
+    bronze = _bronze(tmp_path / "bronze", envelopes.filter(f"seq <= {cut}"))
     batch = envelopes.filter(f"seq > {cut}")
-    assert apply_batch(envelopes, batch, sink, batch_id=0) is True
+    assert apply_batch(bronze, batch, sink, batch_id=0) is True
     # same batch_id → skipped
-    assert apply_batch(envelopes, batch, sink, batch_id=0) is False
+    assert apply_batch(bronze, batch, sink, batch_id=0) is False
     # different batch_id, same data → idempotent recompute
-    assert apply_batch(envelopes, batch, sink, batch_id=1) is True
+    assert apply_batch(bronze, batch, sink, batch_id=1) is True
     _assert_sink_matches(sink, expected_tables)
 
 
 def test_failed_apply_batch_leaves_sink_unchanged(
-    spark, envelopes, expected_tables
+    spark, envelopes, expected_tables, tmp_path
 ):
     """T5 atomicity: a sink failure mid-batch rolls the whole micro-batch
     back — tables, aux state, and batch bookkeeping all revert, and the
@@ -127,6 +140,7 @@ def test_failed_apply_batch_leaves_sink_unchanged(
     cut = max_seq // 2
     sink = DuckDBSink()
     dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
+    bronze = _bronze(tmp_path / "bronze", envelopes.filter(f"seq <= {cut}"))
     before = {n: sink.read_table(n) for n in PROJECTION_TABLES}
     batch = envelopes.filter(f"seq > {cut}")
 
@@ -140,7 +154,7 @@ def test_failed_apply_batch_leaves_sink_unchanged(
 
     sink.set_meta = failing_set_meta
     with pytest.raises(RuntimeError, match="sink failure mid-batch"):
-        apply_batch(envelopes, batch, sink, batch_id=0)
+        apply_batch(bronze, batch, sink, batch_id=0)
     sink.set_meta = orig_set_meta
 
     assert sink.get_meta("applied_batch") is None
@@ -151,7 +165,7 @@ def test_failed_apply_batch_leaves_sink_unchanged(
             f"{name} changed by a failed batch"
         )
     # the same batch applies cleanly after the failure
-    assert apply_batch(envelopes, batch, sink, batch_id=0) is True
+    assert apply_batch(bronze, batch, sink, batch_id=0) is True
     _assert_sink_matches(sink, expected_tables)
 
 
@@ -240,7 +254,9 @@ def test_edge_context_resolves_against_sink_registry(spark):
     assert set(ctx.all_eq) == {"c1", "c2", "p1"}
 
 
-def test_spec_only_batch_feeds_later_placements(spark, envelopes, expected_tables):
+def test_spec_only_batch_feeds_later_placements(
+    spark, envelopes, expected_tables, tmp_path
+):
     """A batch containing ONLY spec-add events (no span entities) must still
     land in the aux spec registry, so placements in LATER batches resolve
     spec_name/outer_diameter — the regression behind the seed-42 split."""
@@ -273,7 +289,7 @@ def test_spec_only_batch_feeds_later_placements(spark, envelopes, expected_table
     # (seqs 14-40 at scale=4/seed=11 are all spec adds)
     sink = DuckDBSink()
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
-    _stream_split(spark, envelopes, [10, 30, max_seq], sink)
+    _stream_split(spark, envelopes, [10, 30, max_seq], sink, tmp_path / "bronze")
     _assert_sink_matches(sink, expected_tables)
 
 
@@ -312,7 +328,7 @@ def test_fold_has_child_matches_spark_fold(spark):
     assert len(driver_rows) > 0
 
 
-def test_apply_batch_large_batch_fallback(spark, monkeypatch):
+def test_apply_batch_large_batch_fallback(spark, monkeypatch, tmp_path):
     """Batches above MAX_DRIVER_BATCH_ROWS never reach the driver in
     full: only the bounded size PROBE (cap+1 rows) is collected — touched
     keys come from a distributed distinct aggregation, the driver-side
@@ -343,24 +359,28 @@ def test_apply_batch_large_batch_fallback(spark, monkeypatch):
     monkeypatch.setattr(R, "_probe_collect", bounded_probe)
     sink = DuckDBSink()
     dehydrate(env.filter(f"seq <= {cut}"), sink)
-    apply_batch(env, env.filter(f"seq > {cut}"), sink, batch_id=0)
+    bronze = _bronze(tmp_path / "bronze", env.filter(f"seq <= {cut}"))
+    apply_batch(bronze, env.filter(f"seq > {cut}"), sink, batch_id=0)
     # with the cap at 0, every collect was the 1-row probe — the batch
     # body (hundreds of rows) never reached the driver
     assert collected_sizes and max(collected_sizes) <= 1
     _assert_sink_matches(sink, expected)
 
 
-def test_driver_path_never_reads_accumulated_log(spark, envelopes, expected_tables):
+def test_driver_path_never_reads_accumulated_log(
+    spark, envelopes, expected_tables, tmp_path
+):
     """A driver-sized, non-overlapping batch is replayed from its own rows
-    and the sink alone: an accumulated log that raises on any scan must go
+    and the sink alone: a bronze directory that raises on any scan must go
     untouched, and the sink still equals the batch fold."""
-    from pyspark.sql import functions as F
-
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     cut = max_seq // 2
     sink = DuckDBSink()
     dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
-    poisoned = envelopes.filter(F.raise_error("accumulated log scanned").isNull())
+    poisoned = _bronze(tmp_path / "bronze", envelopes.filter(f"seq <= {cut}"))
+    (tmp_path / "bronze" / "part-poisoned.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception):
+        spark.read.schema(ENVELOPE_SCHEMA).parquet(poisoned).count()
     assert apply_batch(poisoned, envelopes.filter(f"seq > {cut}"), sink, batch_id=0)
     _assert_sink_matches(sink, expected_tables)
 
@@ -436,7 +456,90 @@ def test_backlog_replay_bounded_batches(spark, envelopes, expected_tables):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_cable_nonretrigger_and_walk_version_resolution(spark):
+def _land(envelopes, events_dir, ranges, mtimes):
+    """Land one JSON file per (lo, hi] seq range, each with the given
+    modification time: the file source hands files over in mtime order."""
+    for i, ((lo, hi), mtime) in enumerate(zip(ranges, mtimes)):
+        path = write_envelope_batch(
+            envelopes.filter(f"seq > {lo} AND seq <= {hi}"), events_dir, i
+        )
+        os.utime(path, (mtime, mtime))
+
+
+def test_steady_state_batch_is_one_spark_job(
+    spark, envelopes, expected_tables, tmp_path
+):
+    """A driver-sized, in-order micro-batch costs one Spark job, its bounded
+    probe: bronze is appended from the probed rows and the replay runs on
+    the driver. Draining N files one per trigger runs at most N + 1 jobs in
+    the query's job group (the first batch after a start also runs the
+    seq-only probe), and the sink still equals the batch fold."""
+    max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
+    cut = max_seq // 3
+    events_dir, bronze, cp = (str(tmp_path / d) for d in ("in", "bronze", "cp"))
+    sink = DuckDBSink()
+    prefix = envelopes.filter(f"seq <= {cut}")
+    dehydrate(prefix, sink)
+    prefix.write.parquet(bronze)
+
+    n_files = 4
+    step = (max_seq - cut) // n_files + 1
+    ranges = [
+        (cut + i * step, min(cut + (i + 1) * step, max_seq)) for i in range(n_files)
+    ]
+    now = time.time()
+    _land(envelopes, events_dir, ranges, [now - 100 + i for i in range(n_files)])
+
+    stream = ProjectionStream(
+        spark, events_dir, sink, bronze, cp, max_files_per_trigger=1
+    )
+    q = stream.start(available_now=True)
+    q.awaitTermination(240)
+    assert q.exception() is None
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert n_files <= len(jobs) <= n_files + 1
+    _assert_sink_matches(sink, expected_tables)
+
+
+def test_out_of_order_files_rewrite_from_driver_written_bronze(
+    spark, envelopes, expected_tables, tmp_path
+):
+    """The later-seq file carries the older mtime, so the stream applies it
+    first and the earlier-seq batch then overlaps the watermark: that batch
+    takes the rewrite path, which reads a bronze directory whose tail was
+    written from probed rows on the driver. The sink equals the batch fold
+    of the whole log, and bronze deduped on seq equals the log."""
+    max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
+    cut = max_seq // 3
+    mid = cut + (max_seq - cut) // 2
+    events_dir, bronze, cp = (str(tmp_path / d) for d in ("in", "bronze", "cp"))
+    sink = DuckDBSink()
+    prefix = envelopes.filter(f"seq <= {cut}")
+    dehydrate(prefix, sink)
+    prefix.write.parquet(bronze)
+
+    now = time.time()
+    _land(envelopes, events_dir, [(cut, mid), (mid, max_seq)], [now - 50, now - 100])
+
+    stream = ProjectionStream(
+        spark, events_dir, sink, bronze, cp, max_files_per_trigger=1
+    )
+    q = stream.start(available_now=True)
+    q.awaitTermination(240)
+    assert q.exception() is None
+    _assert_sink_matches(sink, expected_tables)
+
+    def rows(df):
+        return sorted(map(tuple, df.select("seq", "event_type", "payload").collect()))
+
+    accumulated = (
+        spark.read.schema(ENVELOPE_SCHEMA).parquet(bronze).dropDuplicates(["seq"])
+    )
+    assert rows(accumulated) == rows(envelopes)
+    assert not [f for f in os.listdir(bronze) if f.endswith(".tmp")]
+
+
+def test_cable_nonretrigger_and_walk_version_resolution(spark, tmp_path):
     """Hand-crafted adversarial sequence for the driver-side cable replay:
 
     * batch 1 re-places the equipment with a NON-cable spec AND modifies
@@ -512,13 +615,14 @@ def test_cable_nonretrigger_and_walk_version_resolution(spark):
 
     sink = DuckDBSink()
     dehydrate(env.filter("seq <= 7"), sink)
+    bronze = _bronze(tmp_path / "bronze", env.filter("seq <= 7"))
     assert rel_rows(sink) == [(E, "n1", 1), (E, "n2", 2), (E, "n3", 3)]
 
-    apply_batch(env.filter("seq <= 9"), env.filter("seq IN (8, 9)"), sink, batch_id=0)
+    apply_batch(bronze, env.filter("seq IN (8, 9)"), sink, batch_id=0)
     # non-trigger batch: rows still resolve the ORIGINAL placement's walk
     assert rel_rows(sink) == [(E, "n1", 1), (E, "n2", 2), (E, "n3", 3)]
 
-    apply_batch(env.filter("seq <= 10"), env.filter("seq = 10"), sink, batch_id=1)
+    apply_batch(bronze, env.filter("seq = 10"), sink, batch_id=1)
     # affix trigger re-resolves against the modified walk
     assert rel_rows(sink) == [(E, "n4", 1), (E, "n5", 2)]
 
@@ -529,7 +633,7 @@ def test_cable_nonretrigger_and_walk_version_resolution(spark):
     )
 
 
-def test_service_termination_giveup_guards_across_batches(spark):
+def test_service_termination_giveup_guards_across_batches(spark, tmp_path):
     """The three give-up guards under batch boundaries: a terminal placed
     (a) after its container was removed in a PREVIOUS batch → dropped,
     (b) before its spec exists (spec arrives later in the SAME batch) →
@@ -568,8 +672,9 @@ def test_service_termination_giveup_guards_across_batches(spark):
 
     sink = DuckDBSink()
     dehydrate(env.filter("seq <= 4"), sink)
-    apply_batch(env.filter("seq <= 5"), env.filter("seq = 5"), sink, batch_id=0)
-    apply_batch(env.filter("seq <= 9"), env.filter("seq > 5"), sink, batch_id=1)
+    bronze = _bronze(tmp_path / "bronze", env.filter("seq <= 4"))
+    apply_batch(bronze, env.filter("seq = 5"), sink, batch_id=0)
+    apply_batch(bronze, env.filter("seq > 5"), sink, batch_id=1)
 
     got = sorted(
         map(tuple, sink.fetch_df(
@@ -625,7 +730,7 @@ def test_projection_stream_checkpoint_restart(spark, envelopes, expected_tables)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_apply_batch_probe_seq_first_skips_payload_pull(spark, monkeypatch):
+def test_apply_batch_probe_seq_first_skips_payload_pull(spark, monkeypatch, tmp_path):
     """probe_seq_first=True (the backlog-plausible first batch after a
     (re)start): an OVERSIZED batch must never collect payload rows at all
     — the seq-only probe sizes it, min/max come from the distributed
@@ -658,8 +763,9 @@ def test_apply_batch_probe_seq_first_skips_payload_pull(spark, monkeypatch):
     monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 0)
     sink = DuckDBSink()
     dehydrate(env.filter(f"seq <= {cut}"), sink)
+    bronze = _bronze(tmp_path / "bronze", env.filter(f"seq <= {cut}"))
     apply_batch(
-        env, env.filter(f"seq > {cut}"), sink, batch_id=0, probe_seq_first=True
+        bronze, env.filter(f"seq > {cut}"), sink, batch_id=0, probe_seq_first=True
     )
     assert payload_pulls == []
     _assert_sink_matches(sink, expected)
@@ -668,14 +774,15 @@ def test_apply_batch_probe_seq_first_skips_payload_pull(spark, monkeypatch):
     monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 10_000)
     sink2 = DuckDBSink()
     dehydrate(env.filter(f"seq <= {cut}"), sink2)
+    bronze2 = _bronze(tmp_path / "bronze2", env.filter(f"seq <= {cut}"))
     apply_batch(
-        env, env.filter(f"seq > {cut}"), sink2, batch_id=0, probe_seq_first=True
+        bronze2, env.filter(f"seq > {cut}"), sink2, batch_id=0, probe_seq_first=True
     )
     assert len(payload_pulls) == 1
     _assert_sink_matches(sink2, expected)
 
 
-def test_batch_after_later_seq_batch_rewrites_from_full_log(spark):
+def test_batch_after_later_seq_batch_rewrites_from_full_log(spark, tmp_path):
     """The file source orders landed files by modification time, and two
     files can tie: batch {4} (a placement) then lands before batch {3}
     (the spec it uses). {4} replays against a sink that lacks the spec;
@@ -710,8 +817,9 @@ def test_batch_after_later_seq_batch_rewrites_from_full_log(spark):
 
     sink = DuckDBSink()
     dehydrate(env.filter("seq <= 2"), sink)
-    apply_batch(env.filter("seq != 3"), env.filter("seq = 4"), sink, batch_id=0)
-    apply_batch(env, env.filter("seq = 3"), sink, batch_id=1)
+    bronze = _bronze(tmp_path / "bronze", env.filter("seq <= 2"))
+    apply_batch(bronze, env.filter("seq = 4"), sink, batch_id=0)
+    apply_batch(bronze, env.filter("seq = 3"), sink, batch_id=1)
 
     got = sink.fetch_df(
         'SELECT spec_name, outer_diameter FROM utility_network."span_equipment"'
